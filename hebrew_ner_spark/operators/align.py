@@ -109,7 +109,7 @@ def sameas_components(
 
     Scale shape: align_best's feature join + top-1 window, then the
     pointer-doubling connected components (O(log diameter) rounds,
-    reliable-checkpoint flag honored) over pair-count-sized edges — the
+    lineage broken per ``plans/rounds.py``) over pair-count-sized edges — the
     corpus never re-enters.
     """
     from hebrew_ner_spark.operators.canonicalize import connected_components

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 BIP_I = 4  # min in-degree (citations) for a surviving authority
 BIP_J = 4  # min out-degree (citations made) for a surviving hub
 BIP_MAX_ROUNDS = 8
@@ -54,11 +56,10 @@ def bipartite_core(
     """(vertex, as_hub, as_auth) — flags for every vertex of ``edges``
     (directed src -> dst): membership of its hub copy / authority copy
     in the (i, j)-core fixpoint."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("bipcore")
-    brk = _lineage_breaker(edges, None)
+    brk = lineage_breaker(edges)
     e = _persist("bipcore", edges.select("src", "dst").distinct())
     verts = _persist(
         "bipcore",

@@ -47,9 +47,9 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
 from hebrew_ner_spark.operators.graphstats import _evict, _persist
 from hebrew_ner_spark.operators.textstats import token_freq
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 BPE_ROUNDS = 4  # default merge rounds for the gated training run
 
@@ -58,10 +58,9 @@ BPE_ROUNDS = 4  # default merge rounds for the gated training run
 # round counts but grows the analyzer/optimizer input linearly — at a
 # real-vocab merge budget (~10k rounds) the plan itself becomes the
 # bottleneck. Every BPE_BREAK_EVERY rounds the segmented vocab goes
-# through the shared lineage breaker (localCheckpoint locally, reliable
-# round tables under spark.graft.cc.reliable=true — the canonicalize.py
-# discipline), so plan depth is bounded by the constant while normal
-# rounds stay zero-materialization.
+# through the shared lineage breaker (``plans/rounds.py``), so plan
+# depth is bounded by the constant while normal rounds stay
+# zero-materialization.
 BPE_BREAK_EVERY = 32
 
 _MERGE_SCHEMA = T.StructType(
@@ -111,7 +110,7 @@ def _train(docs: DataFrame, rounds: int) -> tuple[list[Row], DataFrame]:
     """Run the merge loop; returns (winner rows, final segmented vocab)."""
     _evict("bpe")
     w = _persist("bpe", _wrapped_vocab(docs))
-    _break = _lineage_breaker(w, None)
+    _break = lineage_breaker(w)
     winners: list[Row] = []
     depth = 0
     for rnd in range(1, rounds + 1):

@@ -21,15 +21,9 @@ Scale notes:
   uniform key unless one component dominates, in which case the min-agg
   is algebraic and AQE splits the skewed reducer;
 * every round persists and breaks lineage so the plan does not grow
-  exponentially. Two modes: ``localCheckpoint`` (default — executor
-  block storage, no HDFS round-trip, right for local mode and
-  short-lived jobs) and RELIABLE round tables (set conf
-  ``spark.graft.cc.reliable=true`` + a checkpoint dir — on a real
-  cluster, localCheckpoint blocks die with their executor, and an
-  executor loss after round k would make the lineage unrecoverable and
-  fail the whole job). Reliable mode writes each round to parquet under
-  the dir and deletes round k-1 once round k lands, so the on-disk
-  footprint stays at most two label tables, not O(rounds);
+  exponentially — ``plans/rounds.py``'s rule: managed parquet round
+  tables when a checkpoint directory is configured (at most two label
+  tables on disk, not O(rounds)), else ``localCheckpoint``;
 * convergence test is a count of changed labels — one action per round,
   the driver-side loop is O(rounds), not O(rows).
 """
@@ -39,88 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RELIABLE_CONF = "spark.graft.cc.reliable"
-CHECKPOINT_DIR_CONF = "spark.graft.cc.checkpointDir"
-
-
-class _ReliableRoundTables:
-    """Reliable per-round lineage break as managed parquet round-tables.
-
-    ``df.checkpoint(eager=True)`` would also survive executor loss, but
-    Spark never deletes DataFrame checkpoint files while they stay
-    referenced (and cleanCheckpoints is off by default), so a long CC run
-    would leak O(rounds x |V|) storage under the checkpoint dir. Writing
-    each round to ``<dir>/round_<k>`` and deleting round k-1 once round k
-    is fully materialized bounds the footprint to at most two round
-    tables — the table backing the RETURNED labels DataFrame necessarily
-    stays on disk until the caller is done with it. Deletion goes through
-    the Hadoop FileSystem API, so the dir may be HDFS/S3/local alike.
-
-    The final round table must outlive this object — it backs the
-    RETURNED labels DataFrame — so per-invocation cleanup cannot delete
-    it eagerly. Instead each instance registers a best-effort atexit
-    purge of its whole ``cc-<uuid>`` dir: repeated CC invocations in one
-    driver accumulate at most one small final table each until the
-    driver exits, instead of leaking them permanently onto HDFS/S3.
-    The non-convergence error path calls :meth:`cleanup` immediately
-    (nothing is returned, so nothing on disk is still referenced).
-    """
-
-    def __init__(self, spark, base_dir: str):
-        import atexit
-        import uuid
-
-        self.spark = spark
-        self.base = base_dir.rstrip("/") + "/cc-" + uuid.uuid4().hex[:12]
-        self.k = 0
-        atexit.register(self.cleanup)
-
-    def cleanup(self) -> None:
-        """Best-effort removal of every round table this instance wrote.
-        Safe to call twice; swallows errors (at interpreter shutdown the
-        JVM gateway may already be gone — the OS/temp-cleaner then owns
-        the local case, and a cluster job's next run re-registers)."""
-        try:
-            self._delete(self.base)
-        except Exception:
-            pass
-
-    def _delete(self, path: str) -> None:
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(hconf).delete(p, True)
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        path = f"{self.base}/round_{self.k}"
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        if self.k >= 1:
-            # round k-1 fed only the (now fully written) round k
-            self._delete(f"{self.base}/round_{self.k - 1}")
-        self.k += 1
-        return out
-
-
-def _lineage_breaker(df_like: DataFrame, reliable: bool | None):
-    """Returns the per-round lineage-break function. ``reliable=None``
-    reads the session conf (so spark-submit --conf flips the mode with
-    zero code change); reliable mode requires a directory — either an
-    already-set sparkContext checkpoint dir or spark.graft.cc.checkpointDir."""
-    spark = df_like.sparkSession
-    if reliable is None:
-        reliable = spark.conf.get(RELIABLE_CONF, "false").lower() == "true"
-    if not reliable:
-        return lambda df: df.localCheckpoint()
-    base = spark.sparkContext.getCheckpointDir() or spark.conf.get(
-        CHECKPOINT_DIR_CONF, None
-    )
-    if base is None:
-        raise ValueError(
-            f"{RELIABLE_CONF}=true needs sparkContext.setCheckpointDir "
-            f"or {CHECKPOINT_DIR_CONF}"
-        )
-    return _ReliableRoundTables(spark, base)
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 
 def connected_components(
@@ -128,16 +41,13 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 25,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(vertex, component) — component = min vertex id reachable.
 
     ``edges`` is an undirected edge list; isolated vertices that never
     appear in it are the caller's to add (their component is themselves).
-    ``reliable`` selects the per-round lineage-break mode (see module
-    docstring); default None follows the session conf.
     """
-    _break = _lineage_breaker(edges, reliable)
+    _break = lineage_breaker(edges)
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -196,8 +106,8 @@ def connected_components(
             break
     sym.unpersist()
     if changed != 0:
-        # nothing is returned on this path, so reliable-mode round
-        # tables are referenced by no one — reclaim them immediately
+        # nothing is returned on this path, so any round tables are
+        # referenced by no one — reclaim them immediately
         if hasattr(_break, "cleanup"):
             _break.cleanup()
         raise RuntimeError(
@@ -225,7 +135,6 @@ def decremental_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 25,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(vertex, component): FORGET a vertex set from persisted component
     labels — the right-to-erasure / crawl-retraction repair. Forgotten
@@ -278,7 +187,7 @@ def decremental_components(
         .select("vertex")
     )
     fresh_cc = connected_components(
-        sub_e, src="a", dst="b", max_rounds=max_rounds, reliable=reliable
+        sub_e, src="a", dst="b", max_rounds=max_rounds
     ).withColumnRenamed("component", "_nc")
     fresh = sub_v.join(fresh_cc, "vertex", "left").select(
         "vertex", F.coalesce("_nc", "vertex").alias("component")
@@ -292,7 +201,6 @@ def incremental_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 25,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(vertex, component): fold a delta edge set into persisted
     component labels WITHOUT touching the base graph's edges.
@@ -328,9 +236,9 @@ def incremental_components(
         )
     )
     comp_edges = lifted.where(F.col("src") != F.col("dst")).distinct()
-    mapping = connected_components(
-        comp_edges, max_rounds=max_rounds, reliable=reliable
-    ).select(F.col("vertex").alias("_m_from"), F.col("component").alias("_m_to"))
+    mapping = connected_components(comp_edges, max_rounds=max_rounds).select(
+        F.col("vertex").alias("_m_from"), F.col("component").alias("_m_to")
+    )
 
     relabeled = labels.join(
         mapping, labels["component"] == mapping["_m_from"], "left"

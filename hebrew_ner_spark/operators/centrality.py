@@ -42,11 +42,15 @@ peaks at ~2e6).
 
 Scale shape: BFS state is O(sum over sources of reachable set) — the
 all-sources variant gates EXACT betweenness on the (fixed-size) host
-graph; at 10^12-doc scale you pass ``sources=`` a pivot sample
-(Brandes-Pich sampling: unbiased estimator, same plan, state divided
-by |V|/|sample|). The pair join keys on the mid vertex and on (s, t) —
-hash-partitioned equi-joins throughout; sigma tables persist via the
-slot discipline so BFS runs once.
+graph. At 10^12-doc scale use ``betweenness_sampled`` (Brandes-Pich
+pivot estimator: BFS from a pivot sample plus Brandes' backward sweep,
+state divided by |V|/|sample|). Do NOT pass a pivot sample as
+``betweenness_scaled``'s ``sources=``: its sigma-product identity reads
+sigma(m, t) from m's own BFS rows, so it needs EVERY vertex as a source
+and silently zeroes every non-source mid vertex otherwise. The pair
+join keys on the mid vertex and on (s, t) — hash-partitioned
+equi-joins throughout; sigma tables persist via the slot discipline so
+BFS runs once.
 
 No reference counterpart (the reference emits spans, not graphs);
 cites Katz (Psychometrika 1953), Freeman (Sociometry 1977), Brandes
@@ -57,6 +61,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 KATZ_ITERS = 6
 KATZ_ALPHA_DEN = 8  # alpha = 1/8; power of two -> Horner fold exact
@@ -78,15 +84,13 @@ def _vertices(sym: DataFrame) -> DataFrame:
 def katz_scaled(und: DataFrame, iters: int = KATZ_ITERS) -> DataFrame:
     """(vertex, katz_scaled) — the truncated Katz index in exact
     integers, scaled by ALPHA_DEN^iters (Horner fold per round).
-    Rounds go through the shared lineage breaker (localCheckpoint
-    locally, reliable round tables under spark.graft.cc.reliable) —
+    Rounds go through the shared lineage breaker (``plans/rounds.py``) —
     acc_k references both acc_{k-1} and x_k, so a lazy chain doubles
     the analyzed plan per round."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("katz")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym = _persist("katz", sym_edges(und))
     verts = _vertices(sym)
     x = verts.withColumn("w", F.lit(1).cast("long"))
@@ -125,11 +129,10 @@ def bfs_sigma(
     through the shared lineage breaker — frontier_k anti-joins
     visited_{k-1}, which contains frontier_{k-1}, so a lazy chain's
     analyzed plan doubles per level."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("bfs_sigma")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym = _persist("bfs_sigma", sym_edges(und))
     src = _vertices(sym) if sources is None else sources.select("v").distinct()
     frontier = src.select(
@@ -167,7 +170,8 @@ def betweenness_scaled(
     """(vertex, bc_scaled) — betweenness centrality in exact-integer
     micro-units over unordered source pairs (s < t), via the
     sigma-product identity on the BFS table. Vertices carrying no
-    shortest-path traffic report 0."""
+    shortest-path traffic report 0. ``sources`` must cover every vertex
+    (the default); sample pivots with ``betweenness_sampled`` instead."""
     vis = bfs_sigma(und, sources)
     a = vis.select(
         F.col("s"), F.col("v").alias("m"),
@@ -300,10 +304,9 @@ def betweenness_sampled(
     would be a seeded hash sample (sketches.priority_sample exists for
     weighted pivots); the congruence keeps the gate oracle replayable
     without a hash CTE."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym0 = sym_edges(und)
     verts = _vertices(sym0)
     sample = verts.where(F.col("v") % mod == rem)

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 CPM_ROUNDS = 16  # >= longest chain of the gate DAG (12); probed + raise
 DUR_MUL, DUR_ADD, DUR_MOD, DUR_MIN = 13, 7, 20, 5
 
@@ -149,11 +151,10 @@ def _relax(state, edges, durs, brk, rounds, forward: bool):
 def cpm_schedule(und: DataFrame, rounds: int = CPM_ROUNDS) -> DataFrame:
     """(vertex, dur, asap, ls, slack, critical) — the full CPM table
     over the order-oriented DAG of ``und``."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("cpm")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     edges = _persist("cpm", dag_edges(und))
     durs = _persist("cpm", node_durations(edges))
 

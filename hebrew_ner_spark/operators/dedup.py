@@ -359,35 +359,28 @@ def simhash_near_pairs(
     )
 
 
-def _simhash_blocks(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash, band, bval): the 4 x 15-bit block keys — ONE
-    definition shared by the pair generator and the overflow counter, so
-    the two can never count different buckets."""
-    return (
-        simhash(docs)
-        .select(
-            "doc_id",
-            "simhash",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
-                    f"b -> named_struct('band', CAST(b AS BIGINT), "
-                    f"'bval', shiftright(simhash, CAST(b * 15 AS INT)) & 32767))"
-                )
-            ).alias("bk"),
-        )
-        .select(
-            "doc_id",
-            "simhash",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bval").alias("bval"),
-        )
+def _block_keys(sigs: DataFrame, sig_col: str) -> DataFrame:
+    """(doc_id, ``sig_col``, band, bval): the 4 x 15-bit block keys of a
+    60-bit signature — ONE definition shared by the pair generator and
+    the overflow counter, so the two can never count different buckets."""
+    return sigs.select(
+        "doc_id",
+        sig_col,
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
+                f"b -> named_struct('band', CAST(b AS BIGINT), "
+                f"'bval', shiftright({sig_col}, CAST(b * 15 AS INT)) & 32767))"
+            )
+        ).alias("bk"),
+    ).select(
+        "doc_id", sig_col, F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval")
     )
 
 
 def simhash_overflow(docs: DataFrame, cap: int = MAX_BUCKET) -> DataFrame:
     """(band, bval, n_docs) for SimHash blocks above the pairwise cap."""
-    return _bucket_overflow(_simhash_blocks(docs), ["band", "bval"], cap)
+    return _bucket_overflow(_block_keys(simhash(docs), "simhash"), ["band", "bval"], cap)
 
 
 def near_dup_pairs_all(
@@ -506,21 +499,7 @@ def hamming_near_pairs_from_sigs(
     explosion (the mega-cluster guard), and the signature rides the
     grouped array so Hamming verifies without a re-join.
     """
-    blocks = (
-        sigs.select("doc_id", F.col(sig_col).alias("_sig"))
-        .select(
-            "doc_id",
-            "_sig",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
-                    f"b -> named_struct('band', CAST(b AS BIGINT), "
-                    f"'bval', shiftright(_sig, CAST(b * 15 AS INT)) & 32767))"
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "_sig", F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
-    )
+    blocks = _block_keys(sigs.select("doc_id", F.col(sig_col).alias("_sig")), "_sig")
     grouped = (
         blocks.groupBy("band", "bval")
         .agg(F.expr("array_sort(collect_set(struct(doc_id, _sig)))").alias("ms"))

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 DS_EPS_NUM = 3  # removal threshold = (2 * DS_EPS_NUM / DS_EPS_DEN) * rho
 DS_EPS_DEN = 2  # eps = 1/2  ->  threshold 3 * rho
 DS_ROUNDS = 16  # >= log_{3/2}(nv) rounds guarantee an empty fixpoint
@@ -62,11 +64,10 @@ def _peel(und: DataFrame, rounds: int) -> tuple[DataFrame, DataFrame]:
     """Runs the batch peel; returns (schedule, tagged):
     schedule = (round, nv, ne, dens_1e6) one row per executed round,
     tagged = (v, round) every vertex alive at each round's start."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("densest")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     e0 = _persist("densest", und.select("a", "b").distinct())
 
     nodes = brk(_sym(e0).select(F.col("u").alias("v")).distinct())

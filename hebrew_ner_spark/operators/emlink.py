@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 EM_ROUNDS = 12
 EM_FIELDS = ("fp", "lang", "lb")
 EM_INIT_LAM = 100  # milli-units: P(match) starts at 0.1
@@ -131,12 +133,11 @@ def em_trajectory(docs: DataFrame, rounds: int = EM_ROUNDS) -> DataFrame:
     """(round, lam, m_fp, u_fp, m_lang, u_lang, m_lb, u_lb) — the full
     EM parameter trajectory (round r = parameters AFTER r+1 updates),
     every value a clamped milli-unit integer."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("emlink")
     pats = _persist("emlink", agreement_patterns(docs))
-    brk = _lineage_breaker(docs, None)
+    brk = lineage_breaker(docs)
 
     spark = docs.sparkSession
     init = [EM_INIT_LAM] + [
@@ -164,12 +165,11 @@ def em_posteriors(docs: DataFrame, rounds: int = EM_ROUNDS) -> DataFrame:
     posterior under the FINAL fitted parameters: the decision table a
     linker thresholds (every candidate pair inherits its pattern's
     gamma by a broadcast join — no per-pair EM state)."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("emlink")
     pats = _persist("emlink", agreement_patterns(docs))
-    brk = _lineage_breaker(docs, None)
+    brk = lineage_breaker(docs)
 
     spark = docs.sparkSession
     init = [EM_INIT_LAM] + [

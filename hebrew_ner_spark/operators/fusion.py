@@ -20,8 +20,7 @@ round bit-for-bit with the iterations unrolled as MATERIALIZED CTEs,
 per-round max-rescale ((v * SCALE) DIV max) instead of float L1/L2
 normalization, scalar maxes folded back via broadcast (never a driver
 collect), and a per-round lineage break through the shared
-``_lineage_breaker`` (localCheckpoint locally, reliable checkpoint
-under spark.graft.cc.reliable) because broadcast-of-aggregate plans
+``plans/rounds.py`` breaker because broadcast-of-aggregate plans
 nest super-linearly across rounds otherwise.
 
 Scale shape per iteration: two keyed join+agg shuffles (one keyed by
@@ -44,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 FUSION_ITERS = 2
 FUSION_SCALE = 1_000_000
@@ -70,9 +71,7 @@ def _max_rescaled(raw: DataFrame, key: list[str], carry: str) -> DataFrame:
     )
 
 
-def _fusion(
-    assertions: DataFrame, iters: int, reliable: bool | None
-) -> tuple[DataFrame, DataFrame]:
+def _fusion(assertions: DataFrame, iters: int) -> tuple[DataFrame, DataFrame]:
     """Run ``iters`` rounds; returns (fact_conf, host_rel) as of the end.
 
     ``assertions`` must be DISTINCT (host, subj, pred, obj) rows — the
@@ -80,9 +79,7 @@ def _fusion(
     a million pages still votes once (the TruthFinder independence
     assumption, and what keeps the per-key sums evidence-bounded).
     """
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
-    brk = _lineage_breaker(assertions, reliable)
+    brk = lineage_breaker(assertions)
     a = assertions.select("host", *_FACT_KEY).distinct().persist(
         StorageLevel.MEMORY_AND_DISK_DESER
     )
@@ -112,23 +109,21 @@ def _fusion(
     return conf, rel
 
 
-def fact_confidences(
-    assertions: DataFrame, iters: int = FUSION_ITERS, reliable: bool | None = None
-) -> DataFrame:
+def fact_confidences(assertions: DataFrame, iters: int = FUSION_ITERS) -> DataFrame:
     """(subj, pred, obj, n_hosts, conf_1e6) — fused fact confidence.
 
     conf_1e6 == FUSION_SCALE marks the round's most-corroborated fact;
     singleton facts from low-reliability hosts land near the bottom.
     """
-    conf, _ = _fusion(assertions, iters, reliable)
+    conf, _ = _fusion(assertions, iters)
     return conf.select(*_FACT_KEY, "n_hosts", F.col("v").alias("conf_1e6"))
 
 
 def source_reliability(
-    assertions: DataFrame, iters: int = FUSION_ITERS, reliable: bool | None = None
+    assertions: DataFrame, iters: int = FUSION_ITERS
 ) -> DataFrame:
     """(host, n_facts, rel_1e6) — fused per-host source reliability."""
-    _, rel = _fusion(assertions, iters, reliable)
+    _, rel = _fusion(assertions, iters)
     return rel.select("host", "n_facts", F.col("v").alias("rel_1e6"))
 
 
@@ -165,9 +160,7 @@ def fact_source_diversity(assertions: DataFrame) -> DataFrame:
     )
 
 
-def resolve_facts(
-    assertions: DataFrame, iters: int = FUSION_ITERS, reliable: bool | None = None
-) -> DataFrame:
+def resolve_facts(assertions: DataFrame, iters: int = FUSION_ITERS) -> DataFrame:
     """(subj, pred, obj, conf_1e6, n_alternatives) — truth discovery's
     last step: ONE winning object per (subject, predicate) slot, chosen
     by fused confidence with a total deterministic tie order
@@ -183,7 +176,7 @@ def resolve_facts(
     every partition). ``n_alternatives`` keeps the contradiction mass
     visible for the review queue.
     """
-    conf = fact_confidences(assertions, iters, reliable)
+    conf = fact_confidences(assertions, iters)
     return (
         conf.groupBy("subj", "pred")
         .agg(
@@ -210,7 +203,7 @@ N_CALIBRATION_BINS = 10
 
 
 def fusion_calibration(
-    assertions: DataFrame, iters: int = FUSION_ITERS, reliable: bool | None = None
+    assertions: DataFrame, iters: int = FUSION_ITERS
 ) -> DataFrame:
     """(bin, n_facts, sum_conf_1e6, n_correct, mean_conf_1e6, acc_1e6,
     gap_1e6) — the reliability diagram for the fused confidences: does a
@@ -231,7 +224,7 @@ def fusion_calibration(
     half-up) so no double rounding; ECE = sum(n_facts * gap_1e6) /
     sum(n_facts) is one more fold the caller can do on the 10 rows.
     """
-    conf = fact_confidences(assertions, iters, reliable)
+    conf = fact_confidences(assertions, iters)
     winners = (
         conf.groupBy("subj", "pred")
         .agg(

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from hebrew_ner_spark.operators.kg import _sql_terms, doc_triples, with_tokens
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 from hebrew_ner_spark.resources import ENTITY_TERMS
 
 # per-call unique suffix for the recursive-CTE anchor view (purity: a
@@ -360,7 +361,6 @@ def kcore_peel(
     docs: DataFrame,
     k: int = KCORE_K,
     max_rounds: int = KCORE_ORACLE_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(entity, peel_round): the k-core peel trace (onion decomposition)
     of the above-mean co-occurrence graph — the round at which each node
@@ -374,17 +374,14 @@ def kcore_peel(
     drop set is peeled-nodes-sized; AQE broadcasts it) and ONE count
     action for the fixpoint test — O(rounds) driver round-trips, same as
     connected_components. Each round's edge set goes through the shared
-    per-round lineage break (canonicalize._lineage_breaker:
-    localCheckpoint locally, managed round tables under
-    spark.graft.cc.reliable=true on a real cluster) — without it the
+    per-round lineage break (``plans/rounds.py``: round tables when a
+    checkpoint dir is configured, else localCheckpoint) — without it the
     plan-compile cost grows superlinearly with rounds (measured: round
     walls 1.4 s -> 18 s by round 4 on the persist-only variant).
     """
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
     _evict("kcore")
     und = _persist("kcore", above_mean_edges(docs).select("a", "b"))
-    brk = _lineage_breaker(docs, reliable)
+    brk = lineage_breaker(docs)
     edges = brk(und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b"))))
     nodes = edges.select(F.col("a").alias("entity")).distinct()
     n_prev = edges.count()
@@ -435,7 +432,6 @@ def ktruss_peel(
     docs: DataFrame,
     k: int = KTRUSS_K,
     max_rounds: int = KTRUSS_ORACLE_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(a, b, peel_round): the k-truss peel trace of the above-mean
     entity graph — the EDGE-grain sibling of ``kcore_peel``. An edge
@@ -452,14 +448,11 @@ def ktruss_peel(
     enumeration shape kg_triangles already carries, inheriting its AQE
     skew handling), one left join back to keep 0-support edges, one
     count action for the fixpoint test. Rounds go through the shared
-    lineage break (localCheckpoint locally; managed round tables under
-    spark.graft.cc.reliable=true) — the kcore_peel contract.
+    lineage break (``plans/rounds.py``) — the kcore_peel contract.
     """
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
     _evict("ktruss")
     und = _persist("ktruss", above_mean_edges(docs).select("a", "b"))
-    brk = _lineage_breaker(docs, reliable)
+    brk = lineage_breaker(docs)
     edges = brk(und)
     all_edges = edges
     n_prev = edges.count()
@@ -1435,7 +1428,6 @@ DSG_ORACLE_ROUNDS = 5
 def densest_peel(
     und_edges: DataFrame,
     max_rounds: int = DSG_ORACLE_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(node, peel_round, in_densest) — batch-peel densest-subgraph
     extraction (Bahmani, Kumar, Vassilvitskii, VLDB 2012 — the MapReduce
@@ -1457,11 +1449,9 @@ def densest_peel(
     """
     from fractions import Fraction
 
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
     _evict("densest")
     und = _persist("densest", und_edges.select("a", "b"))
-    brk = _lineage_breaker(und_edges, reliable)
+    brk = lineage_breaker(und_edges)
     edges = brk(
         und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )

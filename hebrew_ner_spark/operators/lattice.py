@@ -26,6 +26,7 @@ from __future__ import annotations
 import math
 from typing import Dict, Iterator, List
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -170,9 +171,38 @@ def _carry_groups(process):
     return _run
 
 
-def prune_lattice(
-    lattice: DataFrame, splitting: DataFrame, fallback: bool = True
-) -> DataFrame:
+def _group_bounds(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the contiguous (doc_id, word_index) groups of a
+    batch sorted by them."""
+    doc = pdf["doc_id"].to_numpy()
+    wi = pdf["word_index"].to_numpy()
+    bounds = np.flatnonzero(
+        np.concatenate(([True], (doc[1:] != doc[:-1]) | (wi[1:] != wi[:-1]), [True]))
+    )
+    return bounds[:-1], bounds[1:]
+
+
+def _keep_pattern(memo: dict, fv: np.ndarray, tv: np.ndarray, split: int) -> np.ndarray:
+    """One token group's DFS keep-pattern (bool per edge), memoized per
+    (edge-shape, splitting): real corpora have heavy-tailed but highly
+    repetitive lattice shapes, so the hit rate is near 1.
+
+    The memo key is the raw bytes of the group's (from, to) arrays —
+    zero per-edge Python on the hit path (a tuple(zip(...)) key builds
+    ~|edges| Python objects per GROUP, which at 10^8 token groups was
+    the kernel's dominant cost; measured ~2x on the 1M-doc hybrid
+    chain). Exact, not a hash: distinct shapes have distinct bytes."""
+    key = (fv.tobytes(), tv.tobytes(), split)
+    pattern = memo.get(key)
+    if pattern is None:
+        edges = list(zip(fv.tolist(), tv.tolist()))
+        valid = prune_edge_group(edges, split, fallback=True)
+        pattern = np.fromiter((pair in valid for pair in edges), dtype=bool)
+        memo[key] = pattern
+    return pattern
+
+
+def prune_lattice(lattice: DataFrame, splitting: DataFrame) -> DataFrame:
     """G3 distributed: join splitting evidence, DFS-prune per token group.
 
     ``splitting`` is (doc_id, word_index, splitting) — the explicit join
@@ -204,42 +234,16 @@ def prune_lattice(
     # edge table is hash-partitioned by doc and sorted, and mapInPandas
     # scans (doc, word) boundaries inside each ~2k-row Arrow batch,
     # carrying a possibly-split trailing group into the next batch.
-    # The DFS result is memoized per (edge-shape, splitting) as the
-    # group's whole keep-pattern: real corpora have heavy-tailed but
-    # highly repetitive lattice shapes, so the cache hit rate is near 1.
     memo: dict = {}
     cols = ["doc_id", "word_index", "edge_order", "from_v", "to_v", "form"]
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        doc = pdf["doc_id"].to_numpy()
-        wi = pdf["word_index"].to_numpy()
         fv = pdf["from_v"].to_numpy()
         tv = pdf["to_v"].to_numpy()
         sp = pdf["splitting"].to_numpy()
-        n = len(pdf)
-        bounds = np.flatnonzero(
-            np.concatenate(
-                ([True], (doc[1:] != doc[:-1]) | (wi[1:] != wi[:-1]), [True])
-            )
-        )
-        keep = np.zeros(n, dtype=bool)
-        # memo key is the raw bytes of the group's (from, to) arrays —
-        # zero per-edge Python on the hit path (the old tuple(zip(...))
-        # key built ~|edges| Python objects per GROUP, which at 10^8
-        # token groups was the kernel's dominant cost; measured ~2x on
-        # the 1M-doc hybrid chain). Exact, not a hash: distinct shapes
-        # have distinct bytes.
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            key = (fv[s:e].tobytes(), tv[s:e].tobytes(), int(sp[s]))
-            pattern = memo.get(key)
-            if pattern is None:
-                edges = list(zip(fv[s:e].tolist(), tv[s:e].tolist()))
-                valid = prune_edge_group(edges, int(sp[s]), fallback)
-                pattern = np.fromiter((pair in valid for pair in edges), dtype=bool)
-                memo[key] = pattern
-            keep[s:e] = pattern
+        keep = np.zeros(len(pdf), dtype=bool)
+        for s, e in zip(*_group_bounds(pdf)):
+            keep[s:e] = _keep_pattern(memo, fv[s:e], tv[s:e], int(sp[s]))
         return pdf.loc[keep, cols]
 
     # No repartition: the hinted SMJ output already co-locates every
@@ -253,7 +257,7 @@ def prune_lattice(
 MERGED_SCHEMA = "doc_id long, word_index long, multi_label string"
 
 
-def prune_merge_labels(edge_rows: DataFrame, fallback: bool = True) -> DataFrame:
+def prune_merge_labels(edge_rows: DataFrame) -> DataFrame:
     """Fused G1-G3 DFS prune + J2/A4 label merge for the hybrid lifecycle.
 
     ``edge_rows`` is EDGE-grain (doc_id, word_index, edge_order, from_v,
@@ -275,20 +279,13 @@ def prune_merge_labels(edge_rows: DataFrame, fallback: bool = True) -> DataFrame
     memo: dict = {}
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         doc = pdf["doc_id"].to_numpy()
         wi = pdf["word_index"].to_numpy()
         fv = pdf["from_v"].to_numpy()
         tv = pdf["to_v"].to_numpy()
         sp = pdf["splitting"].to_numpy()
         lab = pdf["mlabel"].to_numpy(dtype=object)
-        bounds = np.flatnonzero(
-            np.concatenate(
-                ([True], (doc[1:] != doc[:-1]) | (wi[1:] != wi[:-1]), [True])
-            )
-        )
-        starts, ends = bounds[:-1], bounds[1:]
+        starts, ends = _group_bounds(pdf)
         sizes = ends - starts
         single = sizes == 1
 
@@ -310,13 +307,7 @@ def prune_merge_labels(edge_rows: DataFrame, fallback: bool = True) -> DataFrame
         o_wi: list = []
         o_ml: list = []
         for s, e in zip(starts[~single], ends[~single]):
-            key = (fv[s:e].tobytes(), tv[s:e].tobytes(), int(sp[s]))
-            pattern = memo.get(key)
-            if pattern is None:
-                edges = list(zip(fv[s:e].tolist(), tv[s:e].tolist()))
-                valid = prune_edge_group(edges, int(sp[s]), fallback)
-                pattern = np.fromiter((pair in valid for pair in edges), dtype=bool)
-                memo[key] = pattern
+            pattern = _keep_pattern(memo, fv[s:e], tv[s:e], int(sp[s]))
             kept = lab[s:e][pattern]
             kept = kept[pd.notna(kept)]
             if len(kept):

@@ -47,17 +47,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 LV_ROUNDS = 12
 
 
 def louvain_phase1(und: DataFrame, rounds: int = LV_ROUNDS) -> DataFrame:
     """(v, comm) — the partition after the synchronous parity-round
     local-move budget over the undirected (a, b) edge list."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("louvain")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     e = und.select("a", "b").distinct()
     sym = _persist(
         "louvain",

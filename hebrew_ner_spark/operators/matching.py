@@ -37,9 +37,13 @@ Cites Gale & Shapley (AMM 1962), McVitie & Wilson (BIT 1971).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+
+from hebrew_ner_spark.plans.rounds import RoundTables, checkpoint_dir
 
 GS_N = 16
 GS_SEED_P, GS_SEED_A = 311, 733
@@ -85,7 +89,7 @@ def preference_tables(spark, n: int = GS_N):
     return ppref, arank
 
 
-def _round_breaker(spark, df_like):
+def _round_breaker(spark):
     """Per-round lineage break for the matching loop.
 
     Measured pathology (r5): ``localCheckpoint()`` on this loop's state
@@ -93,25 +97,15 @@ def _round_breaker(spark, df_like):
     per-round transition wall grows geometrically (0.6 s -> 61 s by
     round 13 on the 16x16 gate instance, state a constant 16 rows and a
     constant-size executed plan) and the r4 split-state implementation
-    measures 116 s in a fresh session. Managed parquet round-tables
-    (the package's reliable CC mode) bound every round at its true cost
-    — the same loop lands ~20 s total, rounds flat. The breaker honors
-    an explicitly-configured reliable checkpoint dir; otherwise it uses
-    a self-cleaning temp dir (no session state is mutated — the
-    ``_ReliableRoundTables`` atexit purge owns the files)."""
-    import tempfile
-
-    from hebrew_ner_spark.operators.canonicalize import (
-        CHECKPOINT_DIR_CONF,
-        _ReliableRoundTables,
+    measures 116 s in a fresh session. Managed parquet round tables
+    (``plans/rounds.RoundTables``) bound every round at its true cost
+    — the same loop lands ~20 s total, rounds flat. So matching always
+    uses round tables, under the configured checkpoint dir when there
+    is one; otherwise under a self-cleaning temp dir (no session state
+    is mutated — the ``RoundTables`` atexit purge owns the files)."""
+    return RoundTables(
+        spark, checkpoint_dir(spark) or tempfile.mkdtemp(prefix="sm_rounds_")
     )
-
-    base = spark.sparkContext.getCheckpointDir() or spark.conf.get(
-        CHECKPOINT_DIR_CONF, None
-    )
-    if base is None:
-        base = tempfile.mkdtemp(prefix="sm_rounds_")
-    return _ReliableRoundTables(spark, base)
 
 
 def _deferred_acceptance(spark, ppref, arank, n: int, rounds: int, brk):
@@ -203,7 +197,7 @@ def stable_matching(
 
     _evict("stable_matching")
     ppref, arank = preference_tables(spark, n)
-    brk = _round_breaker(spark, ppref)
+    brk = _round_breaker(spark)
     ppref = _persist("stable_matching", ppref)
     arank = _persist("stable_matching", arank)
 
@@ -293,7 +287,7 @@ def stable_matching_truncated(
 
     _evict("stable_matching_t")
     ppref, arank = truncated_preference_tables(spark, n, t)
-    brk = _round_breaker(spark, ppref)
+    brk = _round_breaker(spark)
     ppref = _persist("stable_matching_t", ppref)
     arank = _persist("stable_matching_t", arank)
 

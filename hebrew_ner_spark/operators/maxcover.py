@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 MC_K = 6
 MC_ROUNDS = 16
 
@@ -67,11 +69,10 @@ def threshold_greedy_cover(
     descending-thresholds greedy over the (entity, doc_id) set system,
     in selection order with the marginal gain and threshold at
     admission."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("maxcover")
-    brk = _lineage_breaker(sets, None)
+    brk = lineage_breaker(sets)
     m = _persist("maxcover", sets.select("entity", "doc_id").distinct())
 
     spark = sets.sparkSession

@@ -19,10 +19,8 @@ aggregates:
 
 Component count at least halves per round, so O(log |V|) rounds; each
 round's shuffles are keyed by vertex/component id. Rounds go through
-the shared lineage breaker (localCheckpoint locally, reliable round
-tables under ``spark.graft.cc.reliable=true`` — the
-`operators/canonicalize.py` discipline), and exhausting the round
-budget RAISES rather than returning a partial forest.
+the shared lineage breaker (``plans/rounds.py``), and exhausting the
+round budget RAISES rather than returning a partial forest.
 
 Selection contraction (VERDICT r3 #3 — replaces the general inner
 connected-components pass, which paid full min-label-propagation
@@ -59,10 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hebrew_ner_spark.operators.canonicalize import (
-    _lineage_breaker,
-    connected_components,
-)
+from hebrew_ner_spark.operators.canonicalize import connected_components
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 MST_MAX_ROUNDS = 12
 MST_MAX_JUMPS = 20  # pointer-doubling cap: handles chains up to 2^20 deep
@@ -123,13 +119,12 @@ def _contract_selection(picked: DataFrame, _break) -> DataFrame:
 def boruvka_msf(
     edges: DataFrame,
     max_rounds: int = MST_MAX_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(a, b, wu) — the minimum spanning forest of an undirected
     weighted edge list with UNIQUE weights ``wu`` (a < b). Isolated
     vertices simply contribute no edges."""
     spark = edges.sparkSession
-    _break = _lineage_breaker(edges, reliable)
+    _break = lineage_breaker(edges)
     e = edges.select("a", "b", "wu").persist()
     comp = _break(
         e.select(F.col("a").alias("vertex"))

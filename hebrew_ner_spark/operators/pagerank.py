@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 PAGERANK_ITERS = 3
 PR_SCALE = 1_000_000
 PR_BASE = 150_000  # (1 - 0.85) * PR_SCALE, exact
@@ -145,9 +147,7 @@ HITS_ITERS = 3
 HITS_SCALE = 1_000_000
 
 
-def hits_scores(
-    edges: DataFrame, iters: int = HITS_ITERS, reliable: bool | None = None
-) -> DataFrame:
+def hits_scores(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     """(entity_id, hub_1e6, auth_1e6) — HITS after ``iters`` mutual-
     reinforcement iterations over the weighted entity multigraph:
     authority = in-weighted sum of hub scores, hub = out-weighted sum of
@@ -161,17 +161,14 @@ def hits_scores(
     Scale shape: per iteration two keyed join+agg shuffles (one per
     vector) and two SCALAR max aggregates folded back via broadcast —
     never a driver collect. Each round's vectors go through the shared
-    ``_lineage_breaker`` (localCheckpoint by default, reliable
-    checkpoint under spark.graft.cc.reliable) — without the break, the
+    lineage breaker (``plans/rounds.py``) — without the break, the
     nested broadcast-of-aggregate plans grow super-linearly across
     rounds and Catalyst compile time dwarfs the data work (measured:
     92 s for a 4-edge graph). Exactness bound: each raw sum is
     <= SCALE * total graph weight, so BIGINT holds through ~9e12 total
     evidence; beyond that drop SCALE (the oracle scales with it).
     """
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
-    brk = _lineage_breaker(edges, reliable)
+    brk = lineage_breaker(edges)
     wm = (
         edges.groupBy("subj_id", "obj_id")
         .agg(F.sum("n_evidence").cast("long").alias("ew"))

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 PPR_SCALE = 1_000_000_000
 PPR_EPS = 10_000  # push while r(v) > EPS * deg(v)
 PPR_ROUNDS = 28  # gate graph converges in 23; checked + raise
@@ -56,12 +58,11 @@ def ppr_push(
     """(vertex, ppr_scaled, residual) — the settled mass and the
     certificate residuals of seed-personalized PageRank (alpha = 1/4,
     lazy 1/2) after synchronous integer push rounds."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.centrality import sym_edges
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("ppr_push")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym = _persist("ppr_push", sym_edges(und))
     deg = _persist(
         "ppr_push",

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 RPQ_ROUNDS = 16
 # scan . (join|merge)* . agg  — states: 0 start, 1 loop, 2 accept
 RPQ_TRANSITIONS = [
@@ -54,12 +56,11 @@ def rpq_reach(
 ) -> DataFrame:
     """(src, dst) — distinct entity pairs connected by a predicate
     path accepted by the automaton."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     transitions = RPQ_TRANSITIONS if transitions is None else transitions
     _evict("rpq")
-    brk = _lineage_breaker(edges, None)
+    brk = lineage_breaker(edges)
     e = _persist(
         "rpq", edges.select("subj_id", "pred", "obj_id").distinct()
     )

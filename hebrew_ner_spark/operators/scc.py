@@ -34,8 +34,7 @@ count is the longest chain of SCCs shadowed by smaller-labeled upstream
 SCCs (the condensation's label-monotone depth), not |SCC|.  Like
 connected_components, the operator RAISES on hitting the round caps
 rather than returning a silently wrong partition, breaks lineage every
-round through the shared ``_lineage_breaker`` (localCheckpoint locally,
-reliable round tables under spark.graft.cc.reliable), and tests
+round through the shared breaker (``plans/rounds.py``), and tests
 convergence with one count action per round.
 
 Scale shape: every step shuffles by vertex id over label tables of at
@@ -59,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 SCC_MAX_PEELS = 30
 SCC_MAX_ROUNDS = 25
@@ -212,7 +211,6 @@ def scc_components(
     edges: DataFrame,
     max_peels: int = SCC_MAX_PEELS,
     max_rounds: int = SCC_MAX_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(host, scc_id, scc_size) — scc_id = min member, exact partition.
 
@@ -220,7 +218,7 @@ def scc_components(
     the caller's to union in — their SCC is themselves, same contract as
     connected_components).
     """
-    _break = _lineage_breaker(edges, reliable)
+    _break = lineage_breaker(edges)
     live_edges = _break(
         edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     )
@@ -297,7 +295,6 @@ def bowtie_parts(
     edges: DataFrame,
     max_peels: int = SCC_MAX_PEELS,
     max_rounds: int = SCC_MAX_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(host, scc_id, part) — Broder bow-tie class per host.
 
@@ -310,8 +307,8 @@ def bowtie_parts(
     Built on scc_components plus two frontier closures seeded at the
     core; every table involved is host-grain.
     """
-    _break = _lineage_breaker(edges, reliable)
-    sccs = _break(scc_components(edges, max_peels, max_rounds, reliable))
+    _break = lineage_breaker(edges)
+    sccs = _break(scc_components(edges, max_peels, max_rounds))
     core_id = sccs.groupBy("scc_id").agg(F.count("*").alias("_n")).select(
         F.min(
             F.struct((-F.col("_n")).alias("_neg"), F.col("scc_id").alias("sid"))
@@ -356,7 +353,6 @@ MIS_MAX_ROUNDS = 20
 def host_mis(
     edges: DataFrame,
     max_rounds: int = MIS_MAX_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(host, priority, in_mis) — maximal independent set over the
     UNDIRECTED host graph, in_mis a BIGINT 0/1 flag.
@@ -380,7 +376,7 @@ def host_mis(
     """
     from hebrew_ner_spark.functions.hashing import phash_col
 
-    _break = _lineage_breaker(edges, reliable)
+    _break = lineage_breaker(edges)
     sym = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators.centrality import sym_edges
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 PRIO_MUL = 37
 PRIO_ADD = 11
@@ -73,11 +74,10 @@ def luby_mis(
     domain for the affine priority to stay injective (the gate graph's
     default 97 covers hosts 0..63; canopy blocking passes a larger
     prime for doc-id vertices)."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("luby_mis")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym = _persist("luby_mis", sym_edges(und))
     verts = sym.select(F.col("src").alias("v")).distinct()
     active = brk(
@@ -141,11 +141,10 @@ def jp_coloring(
     round commits every local priority minimum among uncolored
     vertices with the smallest color unused by its colored
     neighborhood."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("jp_coloring")
-    brk = _lineage_breaker(und, None)
+    brk = lineage_breaker(und)
     sym = _persist("jp_coloring", sym_edges(und))
     verts = sym.select(F.col("src").alias("v")).distinct()
     uncolored = brk(verts.withColumn("p", _prio(F.col("v")).cast("long")))

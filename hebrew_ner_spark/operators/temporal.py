@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
+
 EA_INF = 1_000_000_000
 EA_ROUNDS = 10
 T_MUL_S, T_MUL_D, T_MOD = 7, 13, 50
@@ -118,11 +120,10 @@ def earliest_arrival(
     — the journey-semantics closure from ``seeds`` (column v), with the
     static closure computed by the same relaxation over zeroed times
     for the disagreement columns."""
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("temporal_ea")
-    brk = _lineage_breaker(tedges, None)
+    brk = lineage_breaker(tedges)
     e = _persist("temporal_ea", tedges.select("src", "dst", "t").distinct())
     verts = _persist(
         "temporal_ea",

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hebrew_ner_spark.plans.rounds import lineage_breaker
 from hebrew_ner_spark.plans.skew import salted_count
 from hebrew_ner_spark.resources import ENTITY_TERMS
 
@@ -569,7 +570,6 @@ def synth_canonical_decls(docs: DataFrame) -> DataFrame:
 def canonical_resolve(
     decls: DataFrame,
     max_rounds: int = CANON_MAX_ROUNDS,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(url, canonical_url, depth) — every page mapped to its chain ROOT
     (the page declaring itself canonical), with the hop count.
@@ -583,16 +583,14 @@ def canonical_resolve(
     the current target over the 10^12-row table. Convergence is one
     count action per round; the cap RAISES (a half-resolved canonical
     map silently merges the wrong duplicates); rounds break lineage via
-    the shared ``_lineage_breaker`` (reliable round tables under
-    spark.graft.cc.reliable — executor loss mid-fold on a real cluster
-    must not orphan the lineage). Declarations pointing
+    the shared breaker (``plans/rounds.py`` — round tables under a
+    configured checkpoint dir, so executor loss mid-fold on a real
+    cluster does not orphan the lineage). Declarations pointing
     outside the crawl resolve to the declared target (left join keeps
     them); cycles cannot appear (declarations are id-decreasing by
     construction — real pipelines break ties by url order first).
     """
-    from hebrew_ner_spark.operators.canonicalize import _lineage_breaker
-
-    _break = _lineage_breaker(decls, reliable)
+    _break = lineage_breaker(decls)
     cur = decls.select(
         "url", F.col("canon").alias("c"),
         F.when(F.col("url") == F.col("canon"), F.lit(0))

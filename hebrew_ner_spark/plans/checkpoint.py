@@ -71,10 +71,9 @@ def run_stage(
 
     On a cluster this is one write with dynamic partition overwrite for
     the todo-bucket subset. Lineage commits per completed bucket group.
+    The overwrite mode is a per-write option, so the caller's session
+    keeps its own ``spark.sql.sources.partitionOverwriteMode``.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     done = {r["part_id"] for r in read_lineage(out_dir, stage)}
     bucketed = with_bucket(df, key, n_buckets)
     todo = sorted(set(range(n_buckets)) - done)
@@ -83,8 +82,11 @@ def run_stage(
 
     t0 = time.perf_counter()
     subset = bucketed.where(F.col("part_id").isin([int(b) for b in todo]))
-    subset.write.mode("overwrite").partitionBy("part_id").parquet(
-        os.path.join(out_dir, stage)
+    (
+        subset.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(os.path.join(out_dir, stage))
     )
     wall_ms = int((time.perf_counter() - t0) * 1000)
 

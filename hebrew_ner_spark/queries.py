@@ -46,7 +46,7 @@ _WINDOW = [
     "dedup_ssjoin_exact",
     "dedup_containment",
     "dedup_ssjoin_routing",
-    # -- combined-state deferred acceptance + reliable round tables
+    # -- combined-state deferred acceptance + managed round tables
     "web_stable_matching",
     # -- ADVICE-fix surfaces: tau-as-aggregate, get()-based coloring,
     # sweep-exhaustion guard, explicit release seeds

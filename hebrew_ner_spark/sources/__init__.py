@@ -1,3 +1,3 @@
-from hebrew_ner_spark.sources.catalog import TABLES, load_table, write_table
+from hebrew_ner_spark.sources.catalog import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "write_table"]
+__all__ = ["TABLES", "load_table"]

@@ -208,23 +208,6 @@ def read_nbest_decoded_text(spark: SparkSession, path: str):
     return toks, headers
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Checkpoint/materialize sink (S10/S11 analog, utils/data.py:340-442).
-
-    Production: ``df.writeTo(tbl).using("iceberg").partitionedBy(bucket(N,
-    "url"))``. Sandbox: parquet with identical partition layout.
-    """
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 # --- N-Triples export / ingest ----------------------------------------------
 #
 # The KG materialization format peers actually exchange: one

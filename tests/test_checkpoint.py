@@ -23,8 +23,12 @@ def _tokens(spark):
 def test_stage_runs_then_skips(spark, tmp_path):
     out = str(tmp_path / "wh")
     df = _tokens(spark)
+    mode_conf = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_conf)
     r1 = checkpoint.run_stage(df, out, "tokens", key="doc_id", n_buckets=4)
     assert r1["processed"] == [0, 1, 2, 3]
+    # dynamic overwrite is a per-write option, not a session side effect
+    assert spark.conf.get(mode_conf) == mode_before
     r2 = checkpoint.run_stage(df, out, "tokens", key="doc_id", n_buckets=4)
     assert r2["skipped"] is True
 

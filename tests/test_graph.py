@@ -1,9 +1,9 @@
 """Entity-linking and connected-components tests."""
 
-import pytest
 from pyspark.sql import Row
 
 from hebrew_ner_spark.operators import canonicalize, linking
+from hebrew_ner_spark.plans import rounds
 
 
 def test_tiered_linking_precedence(spark):
@@ -66,44 +66,44 @@ def test_dedup_components_deterministic_survivor(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """Reliable mode: rounds break lineage via sparkContext checkpoints
-    (cluster-fault-safe), produce identical components, and actually
-    write checkpoint data under the configured directory."""
+    """A configured checkpoint dir is the only switch: with
+    spark.graft.cc.checkpointDir set, rounds break lineage through
+    managed parquet round tables under it (cluster-fault-safe) and give
+    the same components; without it nothing is written."""
     import os
 
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)] + [(100, 101)], ["src", "dst"]
+    )
     ckpt = str(tmp_path / "cc_ckpt")
-    spark.conf.set(canonicalize.CHECKPOINT_DIR_CONF, ckpt)
-    try:
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(40)] + [(100, 101)], ["src", "dst"]
-        )
-        cc = {
+
+    def components():
+        return {
             r.vertex: r.component
-            for r in canonicalize.connected_components(edges, reliable=True).collect()
+            for r in canonicalize.connected_components(edges).collect()
         }
-        assert all(cc[v] == 0 for v in range(41))
-        assert cc[100] == cc[101] == 100
-        found = [f for _, _, fs in os.walk(ckpt) for f in fs]
-        assert found, "reliable mode must persist checkpoint files"
-        # storage must stay bounded: every round but the last two is
-        # deleted as soon as its successor lands (a 25-round CC job on a
-        # real cluster must not leave 50 label-table copies on HDFS)
-        rounds = [
-            d
-            for root, ds, _ in os.walk(ckpt)
-            for d in ds
-            if d.startswith("round_")
-        ]
-        assert 1 <= len(rounds) <= 2, f"round tables leaked: {sorted(rounds)}"
+
+    def written():
+        return sorted(os.path.join(r, f) for r, _, fs in os.walk(tmp_path) for f in fs)
+
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = components()
+    assert all(local[v] == 0 for v in range(41))
+    assert local[100] == local[101] == 100
+    assert not isinstance(rounds.lineage_breaker(edges), rounds.RoundTables)
+    assert written() == [], "localCheckpoint rounds must write no files"
+
+    spark.conf.set(rounds.CHECKPOINT_DIR_CONF, ckpt)
+    try:
+        assert components() == local
     finally:
-        spark.conf.unset(canonicalize.CHECKPOINT_DIR_CONF)
-
-
-def test_connected_components_reliable_requires_dir(spark):
-    edges = spark.createDataFrame([(0, 1)], ["src", "dst"])
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpointDir"):
-            canonicalize.connected_components(edges, reliable=True)
+        spark.conf.unset(rounds.CHECKPOINT_DIR_CONF)
+    assert written(), "round tables must be written under the checkpoint dir"
+    # storage must stay bounded: every round but the last two is
+    # deleted as soon as its successor lands (a 25-round CC job on a
+    # real cluster must not leave 50 label-table copies on HDFS)
+    round_dirs = [d for _, ds, _ in os.walk(ckpt) for d in ds if d.startswith("round_")]
+    assert 1 <= len(round_dirs) <= 2, f"round tables leaked: {sorted(round_dirs)}"
 
 
 def test_fuzzy_minhash_linking_tier(spark):
