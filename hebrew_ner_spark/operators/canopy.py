@@ -25,11 +25,14 @@ are trivially independent). Documents may belong to several canopies
 — that overlap is canopy blocking's recall guarantee.
 
 Shape at 10^12 docs: pair weights come from the capped band-bucket
-equi-join (the dedup plane's candidate machinery, loud overflow and
-all); the tight graph is pair-grain, MIS is O(log n) rounds of
-neighborhood-min aggregations, membership one more equi-join. The
-affine MIS priority needs a modulus above the doc-id domain
-(injectivity); the gate pins a prime comfortably above the corpus.
+pair explosion (``plans.buckets``, the dedup plane's candidate
+machinery, loud overflow and all); the tight graph is pair-grain, MIS
+is O(log n) rounds of neighborhood-min aggregations, membership one
+more equi-join. The affine MIS priority ``pmod(id * a + c, m)`` is
+injective only while the doc-id domain stays below the prime modulus
+``m``: two ids that differ by ``m`` get equal priorities, and a tight
+edge between them stalls ``luby_mis``. ``CANOPY_PRIO_MOD`` is pinned
+well above the largest generated doc-id domain (~10^5 at sf1).
 
 Cites McCallum-Nigam-Ungar (KDD 2000) and Luby (1986). No reference
 counterpart; completes the blocking tier of the ER plane
@@ -42,30 +45,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.buckets import bucket_pairs
+
 CANOPY_T2_BANDS = 2   # tight: >= 2 shared band keys
 CANOPY_T1_BANDS = 1   # loose: >= 1 shared band key
-CANOPY_PRIO_MOD = 100_003  # prime > doc-id domain at every gate sf
+CANOPY_PRIO_MOD = 1_000_003  # prime, ~10x the sf1 doc-id domain
 
 
 def band_pair_weights(docs: DataFrame) -> DataFrame:
     """(a, b, w) — a < b document pairs with the number of shared
     MinHash band keys (the cheap metric), through the capped LSH
-    candidate machinery."""
+    candidate machinery: each shared bucket of <= MAX_BUCKET docs
+    contributes one pair row."""
     from hebrew_ner_spark.operators import dedup
 
-    keyed = dedup._band_keys(docs)
-    ok = (
-        keyed.groupBy("band", "band_key")
-        .agg(F.countDistinct("doc_id").alias("_n"))
-        .where(F.col("_n") <= dedup.MAX_BUCKET)
-        .select("band", "band_key")
-    )
-    k = keyed.join(ok, ["band", "band_key"])
-    l = k.select("band", "band_key", F.col("doc_id").alias("a"))
-    r = k.select("band", "band_key", F.col("doc_id").alias("b"))
     return (
-        l.join(r, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
+        bucket_pairs(
+            dedup._band_keys(docs), ["band", "band_key"], "doc_id", dedup.MAX_BUCKET
+        )
         .groupBy("a", "b")
         .agg(F.count("*").cast("long").alias("w"))
     )

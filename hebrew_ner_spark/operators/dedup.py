@@ -34,6 +34,7 @@ from hebrew_ner_spark.functions.hashing import (
     shingles_col,
 )
 from hebrew_ner_spark.operators.kg import with_tokens
+from hebrew_ner_spark.plans.buckets import bucket_overflow, bucket_pairs
 
 SHINGLE_K = 3          # word k-grams for MinHash / Jaccard
 NUM_HASHES = 16        # MinHash signature length
@@ -158,99 +159,47 @@ def _band_keys(docs: DataFrame, bands: int = LSH_BANDS, num_hashes: int = NUM_HA
     return band_keys_from_shingles(_shingle_rows(docs, k), bands, num_hashes)
 
 
-def _bucket_pairs(
-    keyed: DataFrame, bucket_cols: list[str], cap: int = MAX_BUCKET
-) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs of doc_ids sharing a bucket.
-
-    One aggregation per bucket + an array-side pair explosion, instead of
-    a self-join that evaluates the (expensive) signature plan twice.
-    Bucket member lists are sorted so pairs come out ordered.
-
-    Buckets larger than ``cap`` are EXCLUDED from pair generation: a
-    duplicate cluster of 10^6 boilerplate pages would otherwise build a
-    10^12-entry pair array inside one row. The member array itself is
-    linear (8 bytes/doc — 8 MB at 10^6, fine in an agg buffer); it is the
-    quadratic explosion that must not happen. Dropped buckets are not
-    silent: ``_bucket_overflow`` (same grouping, count-only) reports
-    them, and identical-band giants route through exact-hash grouping
-    (``giant_bucket_groups``) — docs agreeing on a whole signature band
-    are near-identical, so exact grouping is the *better* plan for them.
-    """
-    grouped = (
-        keyed.groupBy(*bucket_cols)
-        .agg(F.expr("array_sort(collect_set(doc_id))").alias("ids"))
-        .where((F.size("ids") > 1) & (F.size("ids") <= cap))
-    )
+def _doc_pairs(keyed: DataFrame, cap: int) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs of doc_ids sharing a (band,
+    band_key) bucket of at most ``cap`` docs (``plans.buckets``)."""
     return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(ids) - 2), i ->
-                      transform(sequence(i + 1, size(ids) - 1), j ->
-                        named_struct('doc_a', ids[i], 'doc_b', ids[j]))))
-                    """
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
+        bucket_pairs(keyed, ["band", "band_key"], "doc_id", cap)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
 
 
-def _bucket_overflow(
-    keyed: DataFrame, bucket_cols: list[str], cap: int = MAX_BUCKET
-) -> DataFrame:
-    """(bucket cols..., n_docs) for buckets the pair generator skipped.
-
-    Count-only aggregation — no member array at all — so the report is
-    cheap even for a 10^8-doc mega cluster.
-    """
-    return (
-        keyed.groupBy(*bucket_cols)
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") > cap)
-    )
-
-
-def lsh_candidate_pairs(
-    docs: DataFrame, cap: int = MAX_BUCKET, keyed: DataFrame | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, cap: int = MAX_BUCKET) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one LSH band bucket.
 
     Bucket sizes follow the corpus duplicate-cluster distribution — AQE
     splits oversized shuffle partitions at runtime; buckets beyond ``cap``
-    are excluded here and surfaced by ``lsh_overflow`` / routed through
-    ``giant_bucket_groups``. Pass a precomputed ``keyed`` band-key table
-    (``_band_keys``) to share one signature pass across the
-    pairs/overflow/routing trio — the signature chain is the dominant
-    dedup cost.
+    are excluded here and surfaced by ``lsh_overflow``. A duplicate
+    cluster of 10^6 boilerplate pages would otherwise build a
+    10^12-entry pair array inside one row; ``near_dup_pairs_all``
+    connects such giants through Jaccard-verified hub edges instead.
     """
-    keyed = _band_keys(docs) if keyed is None else keyed
-    return _bucket_pairs(keyed, ["band", "band_key"], cap)
+    return _doc_pairs(_band_keys(docs), cap)
 
 
-def lsh_overflow(
-    docs: DataFrame, cap: int = MAX_BUCKET, keyed: DataFrame | None = None
-) -> DataFrame:
+def lsh_overflow(docs: DataFrame, cap: int = MAX_BUCKET) -> DataFrame:
     """(band, band_key, n_docs) for LSH buckets above the pairwise cap."""
-    keyed = _band_keys(docs) if keyed is None else keyed
-    return _bucket_overflow(keyed, ["band", "band_key"], cap)
+    return bucket_overflow(
+        _band_keys(docs), ["band", "band_key"], "doc_id", cap
+    ).withColumnRenamed("n", "n_docs")
 
 
-def giant_bucket_groups(
-    docs: DataFrame, cap: int = MAX_BUCKET, keyed: DataFrame | None = None
-) -> DataFrame:
-    """Exact-hash routing for mega buckets: documents whose LSH band
-    bucket exceeds ``cap`` are grouped by full text hash instead of being
-    paired quadratically — (band, band_key, text_md5, n_docs,
-    canonical_doc_id). A bucket that large is a boilerplate cluster;
-    identical-text grouping recovers its duplicate structure in O(n).
-    The band-key join is an equi-join; the giant-bucket side is tiny (one
-    row per overflowing bucket) and broadcast."""
-    keyed = _band_keys(docs) if keyed is None else keyed
-    giants = _bucket_overflow(keyed, ["band", "band_key"], cap).select(
+def giant_bucket_groups(docs: DataFrame, cap: int = MAX_BUCKET) -> DataFrame:
+    """Exact-hash report for mega buckets: documents whose LSH band
+    bucket exceeds ``cap`` grouped by full text hash — (band, band_key,
+    text_md5, n_docs, canonical_doc_id). A bucket that large is a
+    boilerplate cluster; identical-text grouping shows its duplicate
+    structure in O(n). This is a report: the production path,
+    ``near_dup_pairs_all``, connects giants through Jaccard-verified hub
+    edges. The band-key join is an equi-join; the giant-bucket side is
+    tiny (one row per overflowing bucket) and broadcast."""
+    keyed = _band_keys(docs)
+    giants = bucket_overflow(keyed, ["band", "band_key"], "doc_id", cap).select(
         "band", "band_key"
     )
     members = keyed.join(F.broadcast(giants), ["band", "band_key"])
@@ -269,7 +218,6 @@ def near_dup_jaccard(
     threshold: float = 0.5,
     k: int = SHINGLE_K,
     cap: int = MAX_BUCKET,
-    keyed: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidates verified with exact shingle Jaccard >= threshold.
 
@@ -278,11 +226,10 @@ def near_dup_jaccard(
     from per-doc shingle counts (|A| + |B| - |A∩B|). Pairs inside over-cap
     mega buckets are NOT generated here — consumers that must not lose
     giant clusters (duplicate-component building) use
-    ``near_dup_pairs_all``, which unions the exact-hash hub pairs for
+    ``near_dup_pairs_all``, which unions Jaccard-verified hub edges for
     them.
     """
-    pairs = lsh_candidate_pairs(docs, cap, keyed)
-    return _verify_jaccard_pairs(pairs, docs, threshold, k)
+    return _verify_jaccard_pairs(lsh_candidate_pairs(docs, cap), docs, threshold, k)
 
 
 def _verify_jaccard_pairs(
@@ -359,9 +306,9 @@ def simhash_near_pairs(
     )
 
 
-def _block_keys(sigs: DataFrame, sig_col: str) -> DataFrame:
-    """(doc_id, ``sig_col``, band, bval): the 4 x 15-bit block keys of a
-    60-bit signature — ONE definition shared by the pair generator and
+def _block_keys(sigs: DataFrame, sig_col: str, band_bits: int = 15) -> DataFrame:
+    """(doc_id, ``sig_col``, band, bval): the 4 x ``band_bits``-bit block
+    keys of a signature — ONE definition shared by the pair generator and
     the overflow counter, so the two can never count different buckets."""
     return sigs.select(
         "doc_id",
@@ -370,7 +317,8 @@ def _block_keys(sigs: DataFrame, sig_col: str) -> DataFrame:
             F.expr(
                 f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
                 f"b -> named_struct('band', CAST(b AS BIGINT), "
-                f"'bval', shiftright({sig_col}, CAST(b * 15 AS INT)) & 32767))"
+                f"'bval', shiftright({sig_col}, CAST(b * {band_bits} AS INT))"
+                f" & {(1 << band_bits) - 1}))"
             )
         ).alias("bk"),
     ).select(
@@ -380,7 +328,9 @@ def _block_keys(sigs: DataFrame, sig_col: str) -> DataFrame:
 
 def simhash_overflow(docs: DataFrame, cap: int = MAX_BUCKET) -> DataFrame:
     """(band, bval, n_docs) for SimHash blocks above the pairwise cap."""
-    return _bucket_overflow(_block_keys(simhash(docs), "simhash"), ["band", "bval"], cap)
+    return bucket_overflow(
+        _block_keys(simhash(docs), "simhash"), ["band", "bval"], "doc_id", cap
+    ).withColumnRenamed("n", "n_docs")
 
 
 def near_dup_pairs_all(
@@ -404,13 +354,13 @@ def near_dup_pairs_all(
     consumes; the overflow counter still reports every capped bucket.
     """
     keyed = _band_keys(docs, k=k)
-    verified = near_dup_jaccard(docs, threshold, k, cap, keyed).select(
-        "doc_a", "doc_b"
-    )
+    verified = _verify_jaccard_pairs(
+        _doc_pairs(keyed, cap), docs, threshold, k
+    ).select("doc_a", "doc_b")
     # one members pass: rows of over-cap buckets only
     members = keyed.join(
         F.broadcast(
-            _bucket_overflow(keyed, ["band", "band_key"], cap).select(
+            bucket_overflow(keyed, ["band", "band_key"], "doc_id", cap).select(
                 "band", "band_key"
             )
         ),
@@ -454,21 +404,16 @@ def lsh_probe_delta(
     delta member, whenever no combined bucket exceeds ``cap`` (the gate
     asserts that loudly, as cc_dedup_components does). Base-index
     buckets above ``cap`` are excluded from the cross join the same way
-    _bucket_pairs excludes them (mega-buckets route through exact-hash
-    grouping upstream).
+    the pair generator excludes them (``near_dup_pairs_all`` connects
+    mega-buckets through verified hub edges).
     """
     base_keys = _band_keys(base_docs)
     delta_keys = _band_keys(delta_docs)
     # exclude over-cap index buckets from the probe fan-out
-    ok_buckets = (
-        base_keys.groupBy("band", "band_key")
-        .agg(F.count_distinct("doc_id").alias("_n"))
-        .where(F.col("_n") <= cap)
-        .select("band", "band_key")
-    )
+    over = bucket_overflow(base_keys, ["band", "band_key"], "doc_id", cap)
     cross = (
         delta_keys.select("band", "band_key", F.col("doc_id").alias("_d"))
-        .join(ok_buckets, ["band", "band_key"], "left_semi")
+        .join(over.select("band", "band_key"), ["band", "band_key"], "left_anti")
         .join(
             base_keys.select("band", "band_key", F.col("doc_id").alias("_b")),
             ["band", "band_key"],
@@ -480,7 +425,7 @@ def lsh_probe_delta(
         )
         .distinct()
     )
-    intra = _bucket_pairs(delta_keys, ["band", "band_key"], cap)
+    intra = _doc_pairs(delta_keys, cap)
     return cross.unionByName(intra).distinct()
 
 
@@ -489,38 +434,28 @@ def hamming_near_pairs_from_sigs(
     sig_col: str = "simhash",
     max_hamming: int = HAMMING_MAX,
     cap: int = MAX_BUCKET,
+    band_bits: int = 15,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming): band-blocked Hamming pairs over ANY
-    60-bit signature table (doc_id, ``sig_col``) — the SimHash blocking
-    generalized so other 60-bit perceptual signatures (image aHash,
-    multimodal.image_ahash; SRP role signatures) reuse the identical
-    lossless pigeonhole plan: 4 x 15-bit blocks, any pair within radius
-    3 shares a block; over-``cap`` blocks are excluded from the pair
-    explosion (the mega-cluster guard), and the signature rides the
-    grouped array so Hamming verifies without a re-join.
+    signature table (doc_id, ``sig_col``) of 4 x ``band_bits`` bits — the
+    SimHash blocking generalized so other perceptual signatures reuse the
+    identical lossless pigeonhole plan: 60-bit SimHash and image aHash
+    (multimodal.image_ahash) use 4 x 15-bit blocks, 16-bit SRP role
+    signatures (graphstats.similar_roles) 4 x 4-bit blocks; any pair
+    within radius 3 shares a block. Over-``cap`` blocks are excluded from
+    the pair explosion (``plans.buckets``), and the signature rides the
+    member struct so Hamming verifies without a re-join.
     """
-    blocks = _block_keys(sigs.select("doc_id", F.col(sig_col).alias("_sig")), "_sig")
-    grouped = (
-        blocks.groupBy("band", "bval")
-        .agg(F.expr("array_sort(collect_set(struct(doc_id, _sig)))").alias("ms"))
-        .where((F.size("ms") > 1) & (F.size("ms") <= cap))
+    blocks = _block_keys(
+        sigs.select("doc_id", F.col(sig_col).alias("_sig")), "_sig", band_bits
     )
     return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(ms) - 2), i ->
-                      transform(sequence(i + 1, size(ms) - 1), j ->
-                        named_struct(
-                          'doc_a', ms[i].doc_id,
-                          'doc_b', ms[j].doc_id,
-                          'hamming', CAST(bit_count(ms[i]._sig ^ ms[j]._sig) AS BIGINT)))))
-                    """
-                )
-            ).alias("p")
+        bucket_pairs(blocks, ["band", "bval"], F.struct("doc_id", "_sig"), cap)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.expr("CAST(bit_count(a._sig ^ b._sig) AS BIGINT)").alias("hamming"),
         )
-        .select("p.doc_a", "p.doc_b", "p.hamming")
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )

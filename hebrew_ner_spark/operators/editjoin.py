@@ -30,8 +30,8 @@ Shape at 10^12 docs:
   tens of MB even at 10^8 aliases x ~10 variants — and broadcasts, so
   dictionary linking is map-side: NO shuffle of the query vocabulary at
   all beyond its own distinct;
-* the SELF-join form buckets by variant with the dedup module's hard
-  ``cap`` + non-silent overflow contract: a variant key shared by more
+* the SELF-join form buckets by variant with the shared hard ``cap`` +
+  non-silent overflow contract (``plans.buckets``): a variant key shared by more
   than ``cap`` strings (short strings collapse aggressively — deleting
   one char from every 2-letter token lands on the same singletons) is
   excluded from pair generation and surfaced by ``ed_overflow``;
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from hebrew_ner_spark.functions.hashing import phash_col
 from hebrew_ner_spark.operators.textstats import with_tokens
+from hebrew_ner_spark.plans.buckets import bucket_overflow, bucket_pairs
 
 ED_K = 1            # default edit-distance radius
 ED_CAP = 4096       # pairwise-explosion ceiling per variant key
@@ -154,33 +155,6 @@ def edit_join_dict(
     )
 
 
-def _string_bucket_pairs(keyed: DataFrame, cap: int) -> DataFrame:
-    """Distinct (str_a < str_b) pairs sharing a variant key — the
-    ``dedup._bucket_pairs`` discipline at the string grain: one agg per
-    bucket + array-side pair explosion, buckets above ``cap`` excluded
-    (surfaced by ``edit_self_overflow``)."""
-    grouped = (
-        keyed.groupBy("variant")
-        .agg(F.expr("array_sort(collect_set(s))").alias("members"))
-        .where((F.size("members") > 1) & (F.size("members") <= cap))
-    )
-    return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(members) - 2), i ->
-                      transform(sequence(i + 1, size(members) - 1), j ->
-                        named_struct('str_a', members[i], 'str_b', members[j]))))
-                    """
-                )
-            ).alias("p")
-        )
-        .select("p.str_a", "p.str_b")
-        .distinct()
-    )
-
-
 def edit_self_pairs(
     strings: DataFrame, col: str, k: int = ED_K, cap: int = ED_CAP
 ) -> DataFrame:
@@ -190,8 +164,11 @@ def edit_self_pairs(
     spelling variants across a web corpus's token table before they
     inflate the entity dimension.
     """
-    keyed = deletion_variants(strings, col, k)
-    pairs = _string_bucket_pairs(keyed, cap)
+    pairs = (
+        bucket_pairs(deletion_variants(strings, col, k), ["variant"], "s", cap)
+        .select(F.col("a").alias("str_a"), F.col("b").alias("str_b"))
+        .distinct()
+    )
     return (
         pairs.where(F.abs(F.length("str_a") - F.length("str_b")) <= k)
         .withColumn("dist", F.levenshtein("str_a", "str_b").cast("long"))
@@ -204,9 +181,6 @@ def edit_self_overflow(
 ) -> DataFrame:
     """(variant, n_strings) for variant buckets above ``cap`` — the
     non-silent overflow report (count-only; no member arrays)."""
-    keyed = deletion_variants(strings, col, k)
-    return (
-        keyed.groupBy("variant")
-        .agg(F.count_distinct("s").alias("n_strings"))
-        .where(F.col("n_strings") > cap)
-    )
+    return bucket_overflow(
+        deletion_variants(strings, col, k), ["variant"], "s", cap
+    ).withColumnRenamed("n", "n_strings")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
 
+from hebrew_ner_spark.operators.dedup import hamming_near_pairs_from_sigs
 from hebrew_ner_spark.operators.kg import _sql_terms, doc_triples, with_tokens
 from hebrew_ner_spark.plans.rounds import lineage_breaker
 from hebrew_ner_spark.resources import ENTITY_TERMS
@@ -802,7 +803,6 @@ def node_signatures(
 
 
 ROLE_HAMMING_MAX = 3
-ROLE_BANDS = 4  # 16 bits -> 4 x 4-bit blocks: lossless for hamming <= 3
 ROLE_BUCKET_CAP = 4096
 
 
@@ -822,46 +822,15 @@ def similar_roles(
     at 16 bits a band has only 16 values, so a web-scale run raises
     SRP_BITS first — documented, not silent).
 
-    Scale shape: one explode by 4 bands, one (band, bval)-keyed group
-    whose pair explosion is bounded by cap², Hamming verified in-flight
-    from the carried signatures (no re-join), distinct folds band
-    duplicates.
+    The plan is dedup's band-blocked Hamming join
+    (``hamming_near_pairs_from_sigs`` with 4-bit bands): one explode by
+    4 bands, one (band, bval)-keyed group whose pair explosion is
+    bounded by cap², Hamming verified in-flight from the carried
+    signatures (no re-join), distinct folds band duplicates.
     """
-    blocks = sigs.select(
-        "entity",
-        "sig",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {ROLE_BANDS - 1}), "
-                f"b -> named_struct('band', CAST(b AS BIGINT), "
-                f"'bval', shiftright(sig, CAST(b * 4 AS INT)) & 15))"
-            )
-        ).alias("bk"),
-    ).select("entity", "sig", "bk.band", "bk.bval")
-    grouped = (
-        blocks.groupBy("band", "bval")
-        .agg(F.expr("array_sort(collect_set(struct(entity, sig)))").alias("ms"))
-        .where((F.size("ms") > 1) & (F.size("ms") <= cap))
-    )
-    return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(ms) - 2), i ->
-                      transform(sequence(i + 1, size(ms) - 1), j ->
-                        named_struct(
-                          'ent_a', ms[i].entity,
-                          'ent_b', ms[j].entity,
-                          'hamming', CAST(bit_count(ms[i].sig ^ ms[j].sig) AS BIGINT)))))
-                    """
-                )
-            ).alias("p")
-        )
-        .select("p.ent_a", "p.ent_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_near_pairs_from_sigs(
+        sigs.withColumnRenamed("entity", "doc_id"), "sig", max_hamming, cap, band_bits=4
+    ).select(F.col("doc_a").alias("ent_a"), F.col("doc_b").alias("ent_b"), "hamming")
 
 
 def link_pred_ranks(docs: DataFrame, max_center_degree: int = 0) -> DataFrame:

@@ -17,9 +17,9 @@ signal. Three aggregation-shaped steps exploit it:
    boilerplate shingle never builds a member array), while true
    matches remain covered by their other, rarer blocks (redundancy).
    Byte-identical mega clusters lose ALL their blocks this way by
-   design: their recovery path is exact-hash grouping
-   (dedup.exact_dup_groups / giant_bucket_groups), not pairwise
-   comparison — same routing discipline as the LSH bucket cap.
+   design: they are connected by dedup.near_dup_pairs_all's
+   Jaccard-verified hub edges, not by pairwise comparison — the same
+   discipline as the LSH bucket cap (both caps are ``plans.buckets``).
 2. **CBS edge weighting** — for every pair sharing >= 1 surviving
    block, weight = Common Blocks Scheme = count of shared blocks. One
    per-block pair explosion (bounded by the cap, so <= cap*(cap-1)/2
@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators import dedup
+from hebrew_ner_spark.plans.buckets import bucket_overflow, bucket_pairs
 
 BLOCK_CAP = 8  # blocks larger than this are purged (count-only agg)
 
@@ -59,53 +60,28 @@ def entity_blocks(docs: DataFrame) -> DataFrame:
     return dedup.doc_shingles(docs).withColumnRenamed("shingle", "block")
 
 
-def purged_block_report(
-    docs: DataFrame, cap: int = BLOCK_CAP, blocks: DataFrame | None = None
-) -> DataFrame:
+def purged_block_report(docs: DataFrame, cap: int = BLOCK_CAP) -> DataFrame:
     """(block, n_docs) for blocks the purge removed — the non-silent-
     drop contract: what purging discards is reported by a count-only
     aggregation (no member arrays, safe at any block size)."""
-    blocks = entity_blocks(docs) if blocks is None else blocks
-    return (
-        blocks.groupBy("block")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-        .where(F.col("n_docs") > cap)
-    )
+    return bucket_overflow(
+        entity_blocks(docs), ["block"], "doc_id", cap
+    ).withColumnRenamed("n", "n_docs")
 
 
-def cbs_edges(
-    docs: DataFrame, cap: int = BLOCK_CAP, blocks: DataFrame | None = None
-) -> DataFrame:
+def cbs_edges(docs: DataFrame, cap: int = BLOCK_CAP) -> DataFrame:
     """(doc_a, doc_b, cbs) doc_a < doc_b — the weighted blocking graph:
     pairs sharing >= 1 surviving (post-purge) block, weighted by the
     Common Blocks Scheme. Per-block pair fanout is bounded by the purge
     cap, so the explosion is O(blocks * cap^2) worst-case."""
-    blocks = entity_blocks(docs) if blocks is None else blocks
-    grouped = (
-        blocks.groupBy("block")
-        .agg(F.expr("array_sort(collect_set(doc_id))").alias("ids"))
-        .where((F.size("ids") > 1) & (F.size("ids") <= cap))
-    )
     return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(ids) - 2), i ->
-                      transform(sequence(i + 1, size(ids) - 1), j ->
-                        named_struct('doc_a', ids[i], 'doc_b', ids[j]))))
-                    """
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        bucket_pairs(entity_blocks(docs), ["block"], "doc_id", cap)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .agg(F.count("*").cast("long").alias("cbs"))
     )
 
 
-def wnp_pruned(
-    docs: DataFrame, cap: int = BLOCK_CAP, blocks: DataFrame | None = None
-) -> DataFrame:
+def wnp_pruned(docs: DataFrame, cap: int = BLOCK_CAP) -> DataFrame:
     """(doc_a, doc_b, cbs) — the meta-blocked comparison graph: CBS
     edges surviving weighted node pruning. An edge survives iff its
     weight clears the mean incident weight of BOTH endpoints, compared
@@ -115,7 +91,7 @@ def wnp_pruned(
     from hebrew_ner_spark.operators.graphstats import _evict, _persist
 
     _evict("metablock_edges")
-    edges = _persist("metablock_edges", cbs_edges(docs, cap, blocks))
+    edges = _persist("metablock_edges", cbs_edges(docs, cap))
     sym = edges.select(
         F.col("doc_a").alias("v"), F.col("cbs").alias("w")
     ).unionAll(edges.select(F.col("doc_b").alias("v"), F.col("cbs").alias("w")))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.plans.buckets import bucket_overflow
+
 DIM = 64
 LSH_BITS = 8
 DEFAULT_QUERIES = 32
@@ -413,24 +415,20 @@ def embedding_near_dups(
     over-cap buckets at the shuffle, so a 10^7-member bucket never
     materializes as one Arrow group in a Python worker (the in-UDF guard
     remains as a second line of defence). Dropped buckets are surfaced by
-    ``near_dup_overflow``, and the giants route through exact-hash
-    grouping (dedup.giant_bucket_groups). ``bits`` must scale with the
-    corpus (near_dup_bits_for) or every bucket overflows.
+    ``near_dup_overflow``; no pair from them is scored here (document
+    giants are connected by dedup.near_dup_pairs_all's Jaccard-verified
+    hub edges). ``bits`` must scale with the corpus (near_dup_bits_for)
+    or every bucket overflows.
     """
     import numpy as np
     import pandas as pd
 
     thresh_micro = int(threshold * 1_000_000)
     buckets = rp_lsh_buckets(emb, bits)
-    ok = (
-        buckets.groupBy("bucket")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") <= max_bucket)
-        .select("bucket")
-    )
+    over = bucket_overflow(buckets, ["bucket"], "vec_id", max_bucket)
     side = (
         emb.join(buckets, "vec_id")
-        .join(ok, "bucket")
+        .join(over.select("bucket"), "bucket", "left_anti")
         .select("vec_id", "embedding", "bucket")
     )
 
@@ -478,16 +476,14 @@ def near_dup_overflow(
     max_bucket: int = NEAR_DUP_MAX_BUCKET,
 ) -> DataFrame:
     """(bucket, n_vecs) for buckets embedding_near_dups declines to score
-    pairwise — the non-silent counterpart of its ``max_bucket`` guard.
-    Operationally these route through exact-hash grouping
-    (dedup.giant_bucket_groups): a bucket that large is a mega duplicate
-    cluster, not a similarity neighbourhood."""
-    return (
-        rp_lsh_buckets(emb, bits)
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vecs"))
-        .where(F.col("n_vecs") > max_bucket)
-    )
+    pairwise — the non-silent counterpart of its ``max_bucket`` guard
+    (``plans.buckets``). A bucket that large is a mega duplicate cluster,
+    not a similarity neighbourhood; for documents,
+    dedup.near_dup_pairs_all connects such giants through
+    Jaccard-verified hub edges."""
+    return bucket_overflow(
+        rp_lsh_buckets(emb, bits), ["bucket"], "vec_id", max_bucket
+    ).withColumnRenamed("n", "n_vecs")
 
 
 # --- KG-embedding inference (TransE scoring) -------------------------------

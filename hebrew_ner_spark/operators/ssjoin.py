@@ -26,12 +26,12 @@ Shape at 10^12 docs:
   (1 - t) fraction of each doc's shingles — boilerplate shingles land in
   suffixes and never key a bucket, which is the point of the ordering;
 * candidate generation is one aggregation per prefix shingle + an
-  array-side pair explosion (the ``dedup._bucket_pairs`` discipline),
-  with the same hard ``cap`` + non-silent overflow contract: a prefix
-  shingle shared by more than ``cap`` docs is excluded from pair
-  generation and surfaced by ``ssjoin_overflow`` (count-only);
-* the size filter den*min(s_a,s_b) >= num*max(s_a,s_b) prunes inside
-  the pair explosion (J(x,y) <= min/max, exact integer cross-multiply);
+  array-side pair explosion (``plans.buckets``), with the shared hard
+  cap + non-silent overflow contract: a prefix shingle shared by more
+  than the effective cap of docs is excluded from pair generation and
+  surfaced count-only (``ssjoin_routing_report``, ``ssjoin_overflow``);
+* the size filter den*min(s_a,s_b) >= num*max(s_a,s_b) prunes the
+  exploded pairs (J(x,y) <= min/max, exact integer cross-multiply);
 * exact verification touches only candidates: one shingle-keyed
   intersection join + per-doc set sizes, |A∪B| = |A|+|B|-|A∩B|.
 
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators.dedup import SHINGLE_K, _shingle_rows
+from hebrew_ner_spark.plans.buckets import bucket_overflow, bucket_pairs
 
 SSJ_NUM = 5     # default Jaccard threshold 5/10 = 0.5 (near_dup_jaccard's)
 SSJ_DEN = 10
@@ -153,52 +154,35 @@ def _effective_cap(
 
 
 def ssjoin_candidates(
-    docs: DataFrame,
-    num: int = SSJ_NUM,
-    den: int = SSJ_DEN,
-    cap: int = SSJ_CAP,
-    k: int = SHINGLE_K,
-    pref: DataFrame | None = None,
-    eff: DataFrame | None = None,
+    pref: DataFrame, eff: DataFrame, num: int = SSJ_NUM, den: int = SSJ_DEN
 ) -> DataFrame:
     """Distinct (doc_a < doc_b, s_a, s_b) candidate pairs sharing a
-    prefix shingle; set sizes ride along so verification never has to
-    join them back. ``eff`` is an optional 1-row (eff_cap) budget table
-    (``_effective_cap``) that replaces the static ``cap``.
+    prefix shingle (``pref``, from ``prefix_shingles``); set sizes ride
+    along so verification never has to join them back. ``eff`` is the
+    1-row (eff_cap) budget table (``_effective_cap``).
 
-    One aggregation per prefix shingle + array-side pair explosion with
-    the size filter applied INSIDE the explosion; prefix shingles shared
-    by more than ``cap`` docs are excluded here and surfaced (count-only)
-    by ``ssjoin_overflow`` — excluding them breaks the no-false-negative
+    One aggregation per prefix shingle + array-side pair explosion
+    (``plans.buckets``) with the size filter applied to the exploded
+    pairs; prefix shingles shared by more than ``eff_cap`` docs are
+    excluded here and surfaced (count-only) by ``ssjoin_routing_report``
+    and ``ssjoin_overflow`` — excluding them breaks the no-false-negative
     contract loudly, never silently.
     """
-    pref = prefix_shingles(docs, num, den, k) if pref is None else pref
-    grouped = pref.groupBy("shingle").agg(
-        F.expr("array_sort(collect_set(struct(doc_id, s)))").alias("ids")
-    )
-    if eff is not None:
-        # adaptive ceiling (<= cap by construction) rides in as a 1-row
-        # broadcast so the whole decision stays plan-side
-        grouped = grouped.crossJoin(F.broadcast(eff)).where(
-            (F.size("ids") > 1) & (F.size("ids") <= F.col("eff_cap"))
-        )
-    else:
-        grouped = grouped.where((F.size("ids") > 1) & (F.size("ids") <= cap))
     return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(sequence(0, size(ids) - 2), i ->
-                      transform(sequence(i + 1, size(ids) - 1), j ->
-                        named_struct('doc_a', ids[i].doc_id, 's_a', ids[i].s,
-                                     'doc_b', ids[j].doc_id, 's_b', ids[j].s))))
-                    """
-                )
-            ).alias("p")
+        bucket_pairs(
+            # the budget rides in as a broadcast column of the bucket key
+            pref.crossJoin(F.broadcast(eff)),
+            ["shingle", "eff_cap"],
+            F.struct("doc_id", "s"),
+            F.col("eff_cap"),
         )
-        .where(F.expr(f"{den} * least(p.s_a, p.s_b) >= {num} * greatest(p.s_a, p.s_b)"))
-        .select("p.doc_a", "p.doc_b", "p.s_a", "p.s_b")
+        .where(F.expr(f"{den} * least(a.s, b.s) >= {num} * greatest(a.s, b.s)"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.s").alias("s_a"),
+            F.col("b.s").alias("s_b"),
+        )
         .distinct()
     )
 
@@ -209,27 +193,24 @@ def ssjoin_overflow(
     den: int = SSJ_DEN,
     cap: int = SSJ_CAP,
     k: int = SHINGLE_K,
-    pref: DataFrame | None = None,
 ) -> DataFrame:
-    """(shingle, n_docs) for prefix shingles above the pairwise cap — the
-    docs whose exactness contract the cap suspended. Count-only."""
-    pref = prefix_shingles(docs, num, den, k) if pref is None else pref
-    return (
-        pref.groupBy("shingle")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") > cap)
-    )
+    """(shingle, n_docs) for prefix shingles above the static pairwise
+    cap — the docs whose exactness contract the cap suspended.
+    Count-only."""
+    return bucket_overflow(
+        prefix_shingles(docs, num, den, k), ["shingle"], "doc_id", cap
+    ).withColumnRenamed("n", "n_docs")
 
 
-def _over_budget_shingles(pref: DataFrame, eff: DataFrame) -> DataFrame:
-    """(shingle) prefix shingles whose occupancy exceeds the effective cap."""
-    return (
-        pref.groupBy("shingle")
-        .agg(F.count("*").cast("long").alias("n"))
-        .crossJoin(F.broadcast(eff))
-        .where(F.col("n") > F.col("eff_cap"))
-        .select("shingle")
-    )
+def _over_budget(keyed: DataFrame, eff: DataFrame) -> DataFrame:
+    """(shingle, n) for shingles whose distinct-doc count in ``keyed``
+    exceeds the effective cap."""
+    return bucket_overflow(
+        keyed.crossJoin(F.broadcast(eff)),
+        ["shingle", "eff_cap"],
+        "doc_id",
+        F.col("eff_cap"),
+    ).select("shingle", "n")
 
 
 def _routed_candidates(
@@ -247,12 +228,16 @@ def _routed_candidates(
     from hebrew_ner_spark.operators import dedup
 
     routed_docs = (
-        pref.join(_over_budget_shingles(pref, eff), "shingle")
+        pref.join(_over_budget(pref, eff).select("shingle"), "shingle")
         .select("doc_id")
         .distinct()
     )
     keyed = dedup.band_keys_from_shingles(sh.join(routed_docs, "doc_id"))
-    pairs = dedup._bucket_pairs(keyed, ["band", "band_key"], dedup.MAX_BUCKET)
+    pairs = (
+        bucket_pairs(keyed, ["band", "band_key"], "doc_id", dedup.MAX_BUCKET)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .distinct()
+    )
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("s"))
     return (
         pairs.join(
@@ -304,34 +289,25 @@ def ssjoin_pairs(
     den: int = SSJ_DEN,
     cap: int = SSJ_CAP,
     k: int = SHINGLE_K,
-    pairs_per_doc: int | None = SSJ_PAIRS_PER_DOC,
-    route: bool = True,
+    pairs_per_doc: int = SSJ_PAIRS_PER_DOC,
 ) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_union, jaccard_1e6): ALL pairs with
     shingle-set Jaccard >= num/den. The quadratic verify step is bounded
     to candidates. Docs shorter than k tokens have empty shingle sets
     and are excluded — the ``near_dup_jaccard`` convention.
 
-    Candidate generation is budgeted (round 5): with ``pairs_per_doc``
-    set, the exact prefix tier only admits buckets up to the effective
-    occupancy cap (``_effective_cap``); over-budget buckets are ROUTED
-    through the MinHash-LSH index (``route=True``, exact-verified, LSH
-    recall on that slice) or excluded (``route=False``, the pre-budget
-    behavior). Either way ``ssjoin_routing_report`` surfaces the scope
-    of the exactness suspension — never silent. ``pairs_per_doc=None``
-    restores the unbudgeted static-cap tier."""
+    Candidate generation is budgeted (round 5): the exact prefix tier
+    only admits buckets up to the effective occupancy cap
+    (``_effective_cap``, never above ``cap``); over-budget buckets are
+    ROUTED through the MinHash-LSH index (exact-verified, LSH recall on
+    that slice), and ``ssjoin_routing_report`` surfaces the scope of the
+    exactness suspension — never silent."""
     sh = _sh_distinct(docs, k)
     pref = prefix_shingles(docs, num, den, k)
-    eff = (
-        _effective_cap(pref.select("doc_id", "shingle"), cap, pairs_per_doc)
-        if pairs_per_doc is not None
-        else None
-    )
-    cand = ssjoin_candidates(docs, num, den, cap, k, pref=pref, eff=eff)
-    if route and eff is not None:
-        cand = cand.unionByName(
-            _routed_candidates(sh, pref, eff, num, den)
-        ).distinct()
+    eff = _effective_cap(pref.select("doc_id", "shingle"), cap, pairs_per_doc)
+    cand = ssjoin_candidates(pref, eff, num, den).unionByName(
+        _routed_candidates(sh, pref, eff, num, den)
+    ).distinct()
     return _verify_pairs(cand, sh, num, den)
 
 
@@ -349,7 +325,7 @@ def ssjoin_routing_report(
     counterpart of ``ssjoin_overflow`` for the adaptive cap."""
     pref = prefix_shingles(docs, num, den, k)
     eff = _effective_cap(pref.select("doc_id", "shingle"), cap, pairs_per_doc)
-    over = _over_budget_shingles(pref, eff)
+    over = _over_budget(pref, eff).select("shingle")
     routed = pref.join(over, "shingle").select("doc_id").distinct()
     return (
         F.broadcast(eff)
@@ -401,7 +377,7 @@ def containment_pairs(
     den: int = CONT_DEN,
     cap: int = SSJ_CAP,
     k: int = SHINGLE_K,
-    pairs_per_doc: int | None = CONT_PAIRS_PER_DOC,
+    pairs_per_doc: int = CONT_PAIRS_PER_DOC,
 ) -> DataFrame:
     """(doc_a, doc_b, s_a, s_b, n_inter, cont_1e6): DIRECTED
     near-superset detection — every ordered pair with shingle
@@ -424,37 +400,25 @@ def containment_pairs(
     touches candidates only; the keep decision den*n_inter >= num*s_a
     is exact integer.
 
-    With ``pairs_per_doc`` set, the container-index cap is ADAPTIVE
-    (``_containment_effective_cap``: df-histogram with the true
-    n_pref x (df - 1) candidate weight): on vocabulary-saturated
-    corpora the static cap never fires while the sum of per-shingle
-    products goes quadratic (the sf1 51.7x finding). No approximate
-    fallback tier exists here —
-    LSH approximates Jaccard, not asymmetric containment — so
-    over-budget shingles are excluded and surfaced by
-    ``containment_overflow`` (pass the same ``pairs_per_doc``) rather
-    than routed; ``pairs_per_doc=None`` restores the static cap."""
+    The container-index cap is ADAPTIVE (``_containment_effective_cap``:
+    df-histogram with the true n_pref x (df - 1) candidate weight, never
+    above ``cap``): on vocabulary-saturated corpora a static cap never
+    fires while the sum of per-shingle products goes quadratic (the sf1
+    51.7x finding). No approximate fallback tier exists here — LSH
+    approximates Jaccard, not asymmetric containment — so over-budget
+    shingles are excluded and surfaced by ``containment_overflow``
+    (pass the same ``cap`` and ``pairs_per_doc``) rather than routed."""
     sh = _sh_distinct(docs, k)
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("s"))
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
     pref = prefix_shingles(docs, num, den, k)
-    if pairs_per_doc is not None:
-        eff = _containment_effective_cap(
-            pref.select("doc_id", "shingle"), sh, cap, pairs_per_doc
-        )
-        safe = (
-            dfreq.crossJoin(F.broadcast(eff))
-            .where(F.col("_df") <= F.col("eff_cap"))
-            .select("shingle")
-        )
-    else:
-        safe = dfreq.where(F.col("_df") <= cap).select("shingle")
+    eff = _containment_effective_cap(
+        pref.select("doc_id", "shingle"), sh, cap, pairs_per_doc
+    )
+    index = sh.join(_over_budget(sh, eff), "shingle", "left_anti")
     cand = (
         pref.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"), "shingle")
         .join(
-            sh.join(safe, "shingle").select(
-                F.col("doc_id").alias("doc_b"), "shingle"
-            ),
+            index.select(F.col("doc_id").alias("doc_b"), "shingle"),
             "shingle",
         )
         .where(F.col("doc_a") != F.col("doc_b"))
@@ -492,22 +456,14 @@ def containment_overflow(
     docs: DataFrame,
     cap: int = SSJ_CAP,
     k: int = SHINGLE_K,
-    pairs_per_doc: int | None = None,
+    pairs_per_doc: int = CONT_PAIRS_PER_DOC,
 ) -> DataFrame:
-    """(shingle, n_docs) for shingles above the container-index cap —
-    the documents whose containment contract the cap suspended. Pass the
-    same ``pairs_per_doc`` as ``containment_pairs`` to report against
-    the adaptive effective cap instead of the static one."""
+    """(shingle, n_docs) for shingles above the container-index cap of
+    ``containment_pairs`` with the same ``cap`` and ``pairs_per_doc`` —
+    the documents whose containment contract the cap suspended."""
     sh = _sh_distinct(docs, k)
-    counted = sh.groupBy("shingle").agg(
-        F.count("*").cast("long").alias("n_docs")
+    pref = prefix_shingles(docs, CONT_NUM, CONT_DEN, k)
+    eff = _containment_effective_cap(
+        pref.select("doc_id", "shingle"), sh, cap, pairs_per_doc
     )
-    if pairs_per_doc is not None:
-        pref = prefix_shingles(docs, CONT_NUM, CONT_DEN, k)
-        eff = _containment_effective_cap(
-            pref.select("doc_id", "shingle"), sh, cap, pairs_per_doc
-        )
-        return counted.crossJoin(F.broadcast(eff)).where(
-            F.col("n_docs") > F.col("eff_cap")
-        ).select("shingle", "n_docs")
-    return counted.where(F.col("n_docs") > cap)
+    return _over_budget(sh, eff).withColumnRenamed("n", "n_docs")

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hebrew_ner_spark.plans.buckets import bucket_pairs
 from hebrew_ner_spark.plans.rounds import lineage_breaker
 from hebrew_ner_spark.plans.skew import salted_count
 from hebrew_ner_spark.resources import ENTITY_TERMS
@@ -652,7 +653,7 @@ def mirror_host_pairs(
     unchanged with the host as the key; no per-host shingle-set
     materialization, no host x host comparison. LSH banding then
     produces candidate pairs only for hosts sharing a band (same caps /
-    overflow discipline as document LSH — `dedup._bucket_pairs`), and
+    overflow discipline as document LSH — `plans.buckets`), and
     only those pairs pay the exact set-intersection verify, whose cost
     is bounded by the candidates. At 10^8 hosts this is the same plan;
     only the key changed.
@@ -661,8 +662,10 @@ def mirror_host_pairs(
 
     hp = pages.select(host_of(F.col("url")).alias("doc_id"), "text")
     keyed = dedup.band_keys_from_shingles(dedup._shingle_rows(hp))
-    pairs = dedup._bucket_pairs(keyed, ["band", "band_key"]).select(
-        F.col("doc_a").alias("host_a"), F.col("doc_b").alias("host_b")
+    pairs = (
+        bucket_pairs(keyed, ["band", "band_key"], "doc_id", dedup.MAX_BUCKET)
+        .select(F.col("a").alias("host_a"), F.col("b").alias("host_b"))
+        .distinct()
     )
     sh = dedup._shingle_rows(hp).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_sh"))

@@ -81,18 +81,27 @@ def run_stage(
         return {"stage": stage, "skipped": True, "processed": [], "done": sorted(done)}
 
     t0 = time.perf_counter()
-    subset = bucketed.where(F.col("part_id").isin([int(b) for b in todo]))
+    in_todo = F.col("part_id").isin([int(b) for b in todo])
+    subset = bucketed.where(in_todo)
+    stage_dir = os.path.join(out_dir, stage)
     (
         subset.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id")
-        .parquet(os.path.join(out_dir, stage))
+        .parquet(stage_dir)
     )
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
+    # the ledger describes the files just written: count them back
+    # (a partition-pruned scan) instead of re-running the input plan
     counts = {
         int(r["part_id"]): int(r["n"])
-        for r in subset.groupBy("part_id").agg(F.count("*").alias("n")).collect()
+        for r in df.sparkSession.read.schema(subset.schema)
+        .parquet(stage_dir)
+        .where(in_todo)
+        .groupBy("part_id")
+        .agg(F.count("*").alias("n"))
+        .collect()
     }
     _append_lineage(
         out_dir,

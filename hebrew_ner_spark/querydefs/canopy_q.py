@@ -12,6 +12,7 @@ from hebrew_ner_spark.operators.symbreak import (
     PRIO_ADD,
     PRIO_MUL,
 )
+from hebrew_ner_spark.plans.buckets import bucket_pairs
 from hebrew_ner_spark.querydefs.dedup_q import _bands_cte
 from hebrew_ner_spark.registry import query
 from hebrew_ner_spark.sources.catalog import load_table
@@ -176,7 +177,10 @@ def er_canopy_quality(spark, sf_dir):
     clustereval.blocking_quality)."""
     docs = _planted_docs(spark, sf_dir)
     cand = canopy.canopy_candidate_pairs(docs)
-    gold = _dedup._bucket_pairs(
-        docs.select("doc_id", F.md5("text").alias("text_md5")), ["text_md5"]
-    )
+    gold = bucket_pairs(
+        docs.select("doc_id", F.md5("text").alias("text_md5")),
+        ["text_md5"],
+        "doc_id",
+        _dedup.MAX_BUCKET,
+    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     return _clustereval.blocking_quality(cand, gold, docs)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from hebrew_ner_spark.functions.hashing import phash_duck, shingles_duck
 from hebrew_ner_spark.operators import dedup
+from hebrew_ner_spark.plans.buckets import bucket_pairs
 from hebrew_ner_spark.registry import query
 from hebrew_ner_spark.sources.catalog import load_table
 
@@ -308,8 +309,8 @@ def dedup_lsh_pairs_capped(spark, sf_dir):
     """,
 )
 def dedup_giant_exact(spark, sf_dir):
-    """The overflow routing itself: members of over-cap buckets grouped
-    by exact text hash — the planted cluster collapses to one O(n) group
+    """The giant-bucket report: members of over-cap buckets grouped by
+    exact text hash — the planted cluster collapses to one O(n) group
     per band instead of an O(n^2) pair array."""
     return dedup.giant_bucket_groups(_mega_docs(spark, sf_dir), cap=_CAP)
 
@@ -618,7 +619,10 @@ def eval_blocking_quality(spark, sf_dir):
 
     docs = _planted_docs(spark, sf_dir)
     cand = dedup.lsh_candidate_pairs(docs)
-    gold = dedup._bucket_pairs(
-        docs.select("doc_id", F.md5("text").alias("text_md5")), ["text_md5"]
-    )
+    gold = bucket_pairs(
+        docs.select("doc_id", F.md5("text").alias("text_md5")),
+        ["text_md5"],
+        "doc_id",
+        dedup.MAX_BUCKET,
+    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     return _clustereval.blocking_quality(cand, gold, docs)

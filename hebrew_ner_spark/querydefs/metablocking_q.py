@@ -5,8 +5,8 @@ cluster) so every stage is structurally non-vacuous at sf0.01:
 
 * purging — doc 0's shingles jump to df >= 31 > BLOCK_CAP, so the
   whole mega cluster's block set lands in the purge report and
-  contributes ZERO pairs (its recovery path is exact-hash grouping,
-  per the operator contract);
+  contributes ZERO pairs (dedup.near_dup_pairs_all's verified hub
+  edges connect it, per the operator contract);
 * CBS — the organic near-dup corpus yields a wide weight spectrum
   (1 .. ~75 shared shingles at sf0.01);
 * WNP — prunes ~90% of the edges (11.5k -> 1.0k at sf0.01), so the

@@ -63,14 +63,18 @@ def test_canopy_blocking_quality(spark):
     """PC = 1e6 on the planted exact-dup corpus (copies always
     co-canopy) and RR prices real reduction; brute-force pair parity."""
     from hebrew_ner_spark.operators import canopy, clustereval, dedup
+    from hebrew_ner_spark.plans.buckets import bucket_pairs
     from hebrew_ner_spark.querydefs.dedup_q import _planted_docs
     from pyspark.sql import functions as F
 
     docs = _planted_docs(spark, "/root/testdata/sf0.001")
     cand = canopy.canopy_candidate_pairs(docs)
-    gold = dedup._bucket_pairs(
-        docs.select("doc_id", F.md5("text").alias("text_md5")), ["text_md5"]
-    )
+    gold = bucket_pairs(
+        docs.select("doc_id", F.md5("text").alias("text_md5")),
+        ["text_md5"],
+        "doc_id",
+        dedup.MAX_BUCKET,
+    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     row = clustereval.blocking_quality(cand, gold, docs).collect()[0]
     assert row.n_gold > 0
     assert row.pair_completeness_1e6 == 1_000_000
@@ -88,3 +92,20 @@ def test_canopy_blocking_quality(spark):
                 want.add((a, b))
     got = {(r.doc_a, r.doc_b) for r in cand.collect()}
     assert got == want
+
+
+def test_distant_ids_get_distinct_priorities(spark):
+    """Two identical docs whose ids differ by 100_003: a modulus that
+    small gives both the same Luby priority and the MIS stalls on their
+    tight edge. The pinned prime keeps priorities injective, so one of
+    them becomes the center and both share its canopy."""
+    text = "the same crawled page body with enough words for every band"
+    docs = spark.createDataFrame(
+        [(7, text), (100_010, text)], "doc_id long, text string"
+    )
+    rows = canopy.canopy_assign(docs).collect()
+    member = {}
+    for r in rows:
+        member.setdefault(r.doc_id, set()).add(r.center)
+    assert member[7] & member[100_010]
+    assert sum(r.is_center for r in rows if r.doc_id == r.center) == 1

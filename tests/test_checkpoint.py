@@ -73,3 +73,37 @@ def test_bucket_assignment_deterministic(spark):
     a = checkpoint.with_bucket(df, "doc_id", 8).groupBy("part_id").count().toPandas()
     b = checkpoint.with_bucket(df, "doc_id", 8).groupBy("part_id").count().toPandas()
     assert a.sort_values("part_id").equals(b.sort_values("part_id"))
+
+
+def test_stage_evaluates_input_once(spark, tmp_path):
+    # the ledger's n_rows come from the written files, so an expensive
+    # upstream plan (dedup, the mentions model) runs once per stage
+    out = str(tmp_path / "wh")
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        calls.add(1)
+        return x
+
+    # nondeterministic: the bucket filter must not be pushed below the
+    # UDF, which would call it twice within the one write
+    bump_udf = F.udf(bump, "long").asNondeterministic()
+    df = spark.range(200).select(bump_udf("id").alias("doc_id"))
+    checkpoint.run_stage(df, out, "ids", key="doc_id", n_buckets=4)
+    assert calls.value == 200
+    m = checkpoint.stage_metrics(spark, out, "ids").toPandas()
+    assert sorted(m.part_id) == [0, 1, 2, 3]
+    assert m.n_rows.sum() == 200
+    written = checkpoint.read_stage(spark, out, "ids").groupBy("part_id").count()
+    assert dict(zip(m.part_id, m.n_rows)) == {
+        r.part_id: r["count"] for r in written.collect()
+    }
+
+
+def test_empty_stage_records_zero_rows(spark, tmp_path):
+    out = str(tmp_path / "wh")
+    df = spark.range(0).select(F.col("id").alias("doc_id"))
+    r = checkpoint.run_stage(df, out, "ids", key="doc_id", n_buckets=2)
+    assert r["processed"] == [0, 1]
+    m = checkpoint.stage_metrics(spark, out, "ids").toPandas()
+    assert list(m.n_rows) == [0, 0]

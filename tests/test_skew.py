@@ -158,3 +158,92 @@ def test_near_identical_giant_cluster_unifies_via_verified_hubs(spark):
         dedup.near_dup_pairs_all(docs, cap=64)
     ).toPandas()
     assert len(cc) == 300 and (cc.component_id == 0).all()
+
+
+_BOUNDARY_TEXT = "one boilerplate page body copied onto every mirror host"
+
+
+def _boundary_docs(spark, m):
+    return spark.createDataFrame(
+        [(i, _BOUNDARY_TEXT) for i in range(m)], "doc_id long, text string"
+    )
+
+
+def _lsh_case(spark, m, cap):
+    from hebrew_ner_spark.operators import dedup
+
+    docs = _boundary_docs(spark, m)
+    pairs = dedup.lsh_candidate_pairs(docs, cap=cap).collect()
+    over = dedup.lsh_overflow(docs, cap=cap).collect()
+    return {(r.doc_a, r.doc_b) for r in pairs}, [r.n_docs for r in over]
+
+
+def _simhash_case(spark, m, cap):
+    from hebrew_ner_spark.operators import dedup
+
+    docs = _boundary_docs(spark, m)
+    pairs = dedup.simhash_near_pairs(docs, cap=cap).collect()
+    over = dedup.simhash_overflow(docs, cap=cap).collect()
+    return {(r.doc_a, r.doc_b) for r in pairs}, [r.n_docs for r in over]
+
+
+def _metablocking_case(spark, m, cap):
+    from hebrew_ner_spark.operators import metablocking
+
+    docs = _boundary_docs(spark, m)
+    pairs = metablocking.cbs_edges(docs, cap=cap).collect()
+    over = metablocking.purged_block_report(docs, cap=cap).collect()
+    return {(r.doc_a, r.doc_b) for r in pairs}, [r.n_docs for r in over]
+
+
+def _editjoin_case(spark, m, cap):
+    from hebrew_ner_spark.operators import editjoin
+
+    # m two-char strings whose only shared deletion variant is "z"
+    words = spark.createDataFrame([(chr(ord("a") + i) + "z",) for i in range(m)], ["s"])
+    pairs = editjoin.edit_self_pairs(words, "s", k=1, cap=cap).collect()
+    over = editjoin.edit_self_overflow(words, "s", k=1, cap=cap).collect()
+    index = {chr(ord("a") + i) + "z": i for i in range(m)}
+    return (
+        {(index[r.str_a], index[r.str_b]) for r in pairs},
+        [r.n_strings for r in over],
+    )
+
+
+def _kernel_case(spark, m, cap, cap_col=False):
+    from hebrew_ner_spark.plans.buckets import bucket_overflow, bucket_pairs
+
+    # every member appears twice: bucket size counts DISTINCT members
+    keyed = spark.createDataFrame(
+        [("k", i, cap) for i in range(m)] * 2, "bucket string, member long, cap long"
+    )
+    cols, c = (["bucket", "cap"], F.col("cap")) if cap_col else (["bucket"], cap)
+    pairs = bucket_pairs(keyed, cols, "member", c).collect()
+    over = bucket_overflow(keyed, cols, "member", c).collect()
+    assert len(pairs) == len({(r.a, r.b) for r in pairs})
+    return {(r.a, r.b) for r in pairs}, [r.n for r in over]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _lsh_case,
+        _simhash_case,
+        _metablocking_case,
+        _editjoin_case,
+        _kernel_case,
+        lambda spark, m, cap: _kernel_case(spark, m, cap, cap_col=True),
+    ],
+    ids=["lsh", "simhash", "metablocking", "editjoin", "buckets", "buckets_column_cap"],
+)
+def test_bucket_cap_boundary(spark, case):
+    """A bucket of exactly ``cap`` members explodes into all C(cap, 2)
+    pairs and reports no overflow; one more member suppresses every pair
+    of the bucket and reports it count-only with n = cap + 1."""
+    cap = 4
+    pairs, over = case(spark, cap, cap)
+    assert pairs == {(a, b) for a in range(cap) for b in range(a + 1, cap)}
+    assert over == []
+    pairs, over = case(spark, cap + 1, cap)
+    assert pairs == set()
+    assert over and all(n == cap + 1 for n in over)

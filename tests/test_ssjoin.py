@@ -109,14 +109,6 @@ class TestSsjoinCap:
         assert rep.eff_cap == 4 and rep.n_routed_docs == 6
         assert rep.n_over_shingles == len(over)
 
-    def test_overcap_without_routing_suppresses(self, spark):
-        # route=False preserves the pre-budget behavior: over-cap pairs
-        # are suppressed, surfaced by the overflow report only
-        docs = spark.createDataFrame(
-            [(i, "x y z w v u t s") for i in range(6)], ["doc_id", "text"]
-        )
-        assert ssjoin.ssjoin_pairs(docs, cap=4, route=False).count() == 0
-
     def test_budget_derives_effective_cap(self, spark):
         # 8 identical docs, static cap generous, but a 1-pair/doc budget
         # admits nothing at occupancy 8 (28 pairs/bucket > 8 pairs total)
