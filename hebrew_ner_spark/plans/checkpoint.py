@@ -48,15 +48,20 @@ def read_lineage(out_dir: str, stage: str) -> list[dict]:
     if not os.path.exists(p):
         return []
     with open(p) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        lines = f.read().split("\n")
+    # the last piece is "" after a complete append; anything else is a
+    # row torn by a crash mid-append, which never committed its bucket
+    return [json.loads(line) for line in lines[:-1] if line.strip()]
 
 
 def _append_lineage(out_dir: str, stage: str, rows: list[dict]) -> None:
     p = _lineage_path(out_dir, stage)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    with open(p, "a") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
+    with open(p, "a+b") as f:
+        # cut a torn row (see read_lineage) so the new rows start a line
+        f.seek(0)
+        f.truncate(f.read().rfind(b"\n") + 1)
+        f.write("".join(json.dumps(r) + "\n" for r in rows).encode())
 
 
 def run_stage(

@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hebrew_ner_spark.plans import fs
+
 CHECKPOINT_DIR_CONF = "spark.graft.cc.checkpointDir"
 
 
@@ -36,7 +38,8 @@ class RoundTables:
     is fully materialized bounds the footprint to at most two round
     tables — the table backing the RETURNED DataFrame necessarily stays
     on disk until the caller is done with it. Deletion goes through the
-    Hadoop FileSystem API, so the dir may be HDFS/S3/local alike.
+    Hadoop FileSystem API (``plans/fs.py``), so the dir may be
+    HDFS/S3/local alike.
 
     The final round table must outlive this object, so per-invocation
     cleanup cannot delete it eagerly. Instead each instance registers a
@@ -59,15 +62,9 @@ class RoundTables:
         JVM gateway may already be gone — the OS/temp-cleaner then owns
         the local case, and a cluster job's next run re-registers)."""
         try:
-            self._delete(self.base)
+            fs.delete(self.spark, self.base)
         except Exception:
             pass
-
-    def _delete(self, path: str) -> None:
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(hconf).delete(p, True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         path = f"{self.base}/round_{self.k}"
@@ -75,7 +72,7 @@ class RoundTables:
         out = self.spark.read.parquet(path)
         if self.k >= 1:
             # round k-1 fed only the (now fully written) round k
-            self._delete(f"{self.base}/round_{self.k - 1}")
+            fs.delete(self.spark, f"{self.base}/round_{self.k - 1}")
         self.k += 1
         return out
 

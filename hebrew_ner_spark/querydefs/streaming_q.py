@@ -24,22 +24,27 @@ from hebrew_ner_spark.registry import query
 from hebrew_ner_spark.sources.catalog import load_table
 
 
-@query("stream_triples_drain", oracle=_TRIPLES_ORACLE)
-def stream_triples_drain(spark, sf_dir):
-    """Stage -> stream-drain -> read back. The work dir is wiped first
-    so every run is a fresh checkpoint lifetime (batch numbering starts
-    at 0 and the sink's batch-keyed overwrite directories can never pair
-    with a stale previous life)."""
-    from hebrew_ner_spark.streaming.incremental import run_incremental_triples
-
-    # keyed by applicationId so concurrent processes (driver + a local
-    # check) can never wipe each other's staging mid-drain
+def _gate_dir(spark, sf_dir: str, tag: str) -> str:
+    """A fresh scratch dir for one gate run, wiped first so every run is
+    a new checkpoint lifetime. Keyed by applicationId so concurrent
+    processes (driver + a local check) can never wipe each other's
+    staging mid-drain."""
     work = os.path.join(
         tempfile.gettempdir(),
-        f"stream_gate_{os.path.basename(sf_dir.rstrip('/'))}"
+        f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}"
         f"_{spark.sparkContext.applicationId}",
     )
     shutil.rmtree(work, ignore_errors=True)
+    return work
+
+
+@query("stream_triples_drain", oracle=_TRIPLES_ORACLE)
+def stream_triples_drain(spark, sf_dir):
+    """Stage -> stream-drain -> read back, in a fresh gate dir (a new
+    checkpoint lifetime, so batch numbering starts at 0)."""
+    from hebrew_ner_spark.streaming.incremental import run_incremental_triples
+
+    work = _gate_dir(spark, sf_dir, "stream_gate")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
@@ -83,12 +88,7 @@ def stream_event_windows(spark, sf_dir):
         run_windowed_event_counts,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_win_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_win")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
@@ -128,12 +128,7 @@ def stream_stateful_totals(spark, sf_dir):
         run_stateful_entity_totals,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_state_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_state")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
@@ -189,12 +184,7 @@ def stream_click_attribution(spark, sf_dir):
     row set."""
     from hebrew_ner_spark.streaming.incremental import run_attribution_join
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_attr_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_attr")
     ev = load_table(spark, sf_dir, "events")
     clicks_dir = os.path.join(work, "clicks")
     views_dir = os.path.join(work, "views")
@@ -244,12 +234,7 @@ def stream_mv_incremental(spark, sf_dir):
     from hebrew_ner_spark.operators.maintenance import synth_order_changes
     from hebrew_ner_spark.streaming.incremental import run_streaming_mv
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_mv_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_mv")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
@@ -302,12 +287,7 @@ def stream_dedup_bounded(spark, sf_dir):
         run_bounded_stream_dedup,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_bdd_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_bdd")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     os.makedirs(src)
@@ -410,12 +390,7 @@ def stream_stateful_sessions(spark, sf_dir):
         run_stateful_sessions,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_sess_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = _gate_dir(spark, sf_dir, "stream_sess")
     src = os.path.join(work, "src")
     out = os.path.join(work, "out")
     _stage_time_ordered(load_table(spark, sf_dir, "events"), src)

@@ -8,34 +8,64 @@ survey reserves: the batch stage operators drop unchanged into
 (checkpointLocation) replacing the bucket ledger for arrival-driven
 processing.
 
-* ``run_incremental_triples`` — drain whatever landed in a documents
-  directory with Trigger.availableNow, extract triples per micro-batch
-  through the *identical* batch operator, write parquet. Re-running
-  after new files arrive processes only the new files. The sink is
-  **idempotent per micro-batch**: each batch overwrites its own
-  deterministic ``batch_id=<N>`` subdirectory, so a crash between the
-  sink write and the streaming checkpoint commit replays the batch into
-  the same path instead of duplicating rows (a plain append would be
-  at-least-once).
-* ``run_windowed_event_counts`` — event-time tumbling-window counts with
-  a watermark for late data, drained with availableNow; the aggregate
-  matches the batch groupBy exactly once the stream is drained.
-* ``run_incremental_unique_docs`` — streaming exact dedup at ingestion:
-  dropDuplicates keyed state persists in the checkpoint, so re-landed
-  mirror pages are dropped across drains AND restarts.
-* ``run_stateful_entity_totals`` — custom stateful operator via
-  ``applyInPandasWithState``: cumulative per-entity mention totals whose
-  state restores from the checkpointed state store.
+One exactly-once rule covers every drain, and ``_drain`` is the only
+place that applies it: **a drain's output lives only as long as its
+checkpoint.**
+
+* A missing checkpoint starts a new lifetime, so the drain deletes its
+  output directory before it starts. Batch numbering restarts at 0 with
+  the checkpoint; surviving output would pair a replayed batch 0 with
+  stale higher-numbered batch directories (double counts), or make the
+  parquet file sink skip batch ids its ``_spark_metadata`` log already
+  committed (newly landed rows lost).
+* A batch-keyed drain overwrites ``<out>/batch_id=<N>`` for micro-batch
+  N, so a crash between the sink write and the checkpoint commit
+  replays the batch into the same directory instead of duplicating rows
+  (a plain append would be at-least-once). A file-sink drain gets the
+  same guarantee from the file sink's metadata log.
+* Existence checks and deletes go through the Hadoop FileSystem
+  (``plans/fs.py``), so local paths, ``file://``, HDFS and S3 alike.
+
+Every drain runs with Trigger.availableNow and returns once everything
+that has landed is processed; re-running after new files arrive
+processes only the new files. Sources read one file per micro-batch
+(``_files``), except the windowed aggregate.
+
+Batch-keyed drains, output under ``<out_dir>/<name>/batch_id=<N>``:
+
+* ``run_incremental_triples`` (``triples``) — triple extraction through
+  the *identical* batch operator.
+* ``run_incremental_unique_docs`` (``unique``) — exact dedup at
+  ingestion; dropDuplicates keyed state persists in the checkpoint.
+* ``run_stateful_entity_totals`` (``entity_totals``) — cumulative
+  per-entity mention totals via ``applyInPandasWithState``.
+* ``run_incremental_link_graph`` (``link_edges``) and
+  ``run_incremental_postings`` (``postings``) — algebraic per-batch
+  partials, folded by ``read_link_graph`` / ``read_postings``.
+* ``run_streaming_mv`` (``mv``) — incremental view maintenance over a
+  CDC change stream, one full MV version per batch.
+
+File-sink drains, append-mode parquet at ``out_dir`` itself:
+
+* ``run_windowed_event_counts`` — event-time tumbling windows with a
+  watermark.
+* ``run_attribution_join`` — watermarked stream-stream interval join.
+* ``run_bounded_stream_dedup`` — bounded-state
+  ``dropDuplicatesWithinWatermark``.
+* ``run_stateful_sessions`` — sessionization with event-time timeouts.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from hebrew_ner_spark.operators import kg
+from hebrew_ner_spark.plans import fs
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -46,54 +76,75 @@ EVENTS_SCHEMA = (
 )
 
 
-def run_incremental_triples(
-    spark: SparkSession, src_dir: str, out_dir: str, checkpoint_dir: str
-) -> int:
-    """Drain new document files -> append extracted triples. Returns the
-    number of micro-batches processed in this drain."""
-    # batch_id numbering restarts at 0 when the checkpoint is gone, so a
-    # fresh checkpoint + surviving output would pair a replayed batch 0
-    # with stale higher-numbered directories from the previous life and
-    # double-count. A missing checkpoint therefore resets the output:
-    # exactly-once holds per checkpoint lifetime.
-    triples_dir = os.path.join(out_dir, "triples")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(triples_dir):
-        import shutil
-
-        shutil.rmtree(triples_dir)
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
+def _files(spark: SparkSession, schema: str, src_dir: str) -> DataFrame:
+    """The parquet files landing in ``src_dir``, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    n_batches = {"n": 0}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        n_batches["n"] += 1
-        # overwrite of a batch-keyed path = exactly-once under replay:
-        # the same batch_id always lands in (and fully replaces) the
-        # same directory, whatever partial state a crash left there
-        (
-            kg.doc_triples(batch_df)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "triples", f"batch_id={batch_id}"))
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def _drain(
+    stream: DataFrame,
+    out: str,
+    checkpoint_dir: str,
+    write_batch: Callable[[DataFrame, int], DataFrame] | None = None,
+    output_mode: str = "append",
+) -> tuple[StreamingQuery, list[int]]:
+    """Drain ``stream`` under the module's exactly-once rule.
+
+    ``out`` is the directory tied to ``checkpoint_dir``: it is deleted
+    when the checkpoint is missing. With ``write_batch``, micro-batch N
+    overwrites ``out/batch_id=<N>`` with ``write_batch(batch_df, N)``;
+    without it, the parquet file sink writes at ``out``.
+    ``output_mode`` is "append" or "update". Returns the finished query
+    (``recentProgress`` stays readable) and the ids of the batches
+    written in this drain."""
+    spark = stream.sparkSession
+    if not fs.exists(spark, checkpoint_dir):
+        fs.delete(spark, out)
+    writer = stream.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", checkpoint_dir
     )
+    written: list[int] = []
+    if write_batch is None:
+        writer = writer.format("parquet").option("path", out)
+    else:
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            write_batch(batch_df, batch_id).write.mode("overwrite").parquet(
+                os.path.join(out, f"batch_id={batch_id}")
+            )
+            written.append(batch_id)
+
+        writer = writer.foreachBatch(sink)
+    q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
-    return n_batches["n"]
+    return q, written
+
+
+def run_incremental_triples(
+    spark: SparkSession, src_dir: str, out_dir: str, checkpoint_dir: str
+) -> int:
+    """Drain new document files -> extracted triples under
+    ``<out_dir>/triples`` (module rule). Returns the number of
+    micro-batches processed in this drain."""
+    _, written = _drain(
+        _files(spark, DOCS_SCHEMA, src_dir),
+        os.path.join(out_dir, "triples"),
+        checkpoint_dir,
+        lambda batch_df, _: kg.doc_triples(batch_df),
+    )
+    return len(written)
 
 
 def run_windowed_event_counts(
     spark: SparkSession, src_dir: str, out_dir: str, checkpoint_dir: str
 ) -> None:
-    """Event-time tumbling 1h windows with a 2h watermark, availableNow."""
+    """Event-time tumbling 1h windows with a 2h watermark, availableNow.
+    Every new file lands in one micro-batch: the batch boundaries decide
+    which late rows the watermark drops."""
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
     agg = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -106,15 +157,7 @@ def run_windowed_event_counts(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, out_dir, checkpoint_dir)
 
 
 def run_incremental_unique_docs(
@@ -128,34 +171,19 @@ def run_incremental_unique_docs(
 
     availableNow-drained here; a 24/7 ingest would bound the state with
     ``dropDuplicatesWithinWatermark`` instead of keeping every hash
-    forever. Sink uses the same per-batch-overwrite idempotence as the
-    triples path.
+    forever. Output under ``<out_dir>/unique`` (module rule).
     """
-    uniq_dir = os.path.join(out_dir, "unique")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(uniq_dir):
-        import shutil
-
-        shutil.rmtree(uniq_dir)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    uniq = (
+        _files(spark, DOCS_SCHEMA, src_dir)
+        .withColumn("text_md5", F.md5("text"))
+        .dropDuplicates(["text_md5"])
     )
-    uniq = stream.withColumn("text_md5", F.md5("text")).dropDuplicates(["text_md5"])
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .parquet(os.path.join(uniq_dir, f"batch_id={batch_id}"))
-        )
-
-    q = (
-        uniq.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        uniq,
+        os.path.join(out_dir, "unique"),
+        checkpoint_dir,
+        lambda batch_df, _: batch_df,
     )
-    q.awaitTermination()
 
 
 def run_stateful_entity_totals(
@@ -167,29 +195,16 @@ def run_stateful_entity_totals(
     store and restores from the checkpoint on restart.
 
     Emits (entity, total) rows with the updated running total whenever an
-    entity appears in a batch; the parquet sink keeps the latest row per
-    entity per drain under the idempotent per-batch layout.
+    entity appears in a batch, under ``<out_dir>/entity_totals``
+    (module rule).
     """
     from typing import Iterator, Tuple
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from hebrew_ner_spark.operators import kg
-
-    totals_dir = os.path.join(out_dir, "entity_totals")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(totals_dir):
-        import shutil
-
-        shutil.rmtree(totals_dir)
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     mentions = (
-        kg.doc_token_labels(stream)
+        kg.doc_token_labels(_files(spark, DOCS_SCHEMA, src_dir))
         .where(F.col("label") != "O")
         .select(F.col("token").alias("entity"))
     )
@@ -210,21 +225,13 @@ def run_stateful_entity_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .parquet(os.path.join(totals_dir, f"batch_id={batch_id}"))
-        )
-
-    q = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        totals,
+        os.path.join(out_dir, "entity_totals"),
+        checkpoint_dir,
+        lambda batch_df, _: batch_df,
+        output_mode="update",
     )
-    q.awaitTermination()
 
 
 PAGES_SCHEMA = (
@@ -236,66 +243,37 @@ def run_incremental_link_graph(
     spark: SparkSession, src_dir: str, out_dir: str, checkpoint_dir: str
 ) -> int:
     """Drain newly-landed page files -> per-batch PARTIAL host-graph
-    counts. Each micro-batch runs the identical batch extractor
-    (weblinks.link_edges) over just its files and overwrites its own
-    batch-keyed directory (exactly-once under replay, the
-    run_incremental_triples contract); ``read_link_graph`` folds the
-    partials with one aggregate — counts are algebraic, so
+    counts under ``<out_dir>/link_edges`` (module rule). Each
+    micro-batch runs the identical batch extractor
+    (weblinks.link_edges) over just its files; ``read_link_graph`` folds
+    the partials with one aggregate — counts are algebraic, so
     fold(partials) == batch build, which the pytest pins. Returns the
     number of micro-batches processed in this drain."""
     from hebrew_ner_spark.operators import weblinks
 
-    edges_dir = os.path.join(out_dir, "link_edges")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(edges_dir):
-        import shutil
-
-        shutil.rmtree(edges_dir)
-
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _, written = _drain(
+        _files(spark, PAGES_SCHEMA, src_dir),
+        os.path.join(out_dir, "link_edges"),
+        checkpoint_dir,
+        lambda batch_df, _: weblinks.link_edges(batch_df),
     )
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        n_batches["n"] += 1
-        (
-            weblinks.link_edges(batch_df)
-            .write.mode("overwrite")
-            .parquet(os.path.join(edges_dir, f"batch_id={batch_id}"))
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
+    return len(written)
 
 
 def read_link_graph(spark: SparkSession, out_dir: str) -> DataFrame:
     """Fold the per-batch partial counts into the host graph (one
     aggregation — the partials are already host-pair-keyed and tiny).
-    A drain that processed zero batches wrote nothing; fold to an empty
-    graph instead of raising PATH_NOT_FOUND — caught from the reader
-    (not os.path.exists, which is local-FS-only and would silently
-    empty a populated s3a://hdfs:// graph)."""
-    from pyspark.errors import AnalysisException
-
+    A drain that processed zero batches wrote nothing and folds to an
+    empty graph."""
     edges_dir = os.path.join(out_dir, "link_edges")
-    try:
-        partials = spark.read.parquet(edges_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
+    if not fs.exists(spark, edges_dir):
         return spark.createDataFrame(
             [], "src_host string, dst_host string, n_links long"
         )
-    return partials.groupBy("src_host", "dst_host").agg(
-        F.sum("n_links").cast("long").alias("n_links")
+    return (
+        spark.read.parquet(edges_dir)
+        .groupBy("src_host", "dst_host")
+        .agg(F.sum("n_links").cast("long").alias("n_links"))
     )
 
 
@@ -303,64 +281,40 @@ def run_incremental_postings(
     spark: SparkSession, src_dir: str, out_dir: str, checkpoint_dir: str
 ) -> int:
     """Drain newly-landed page files -> per-batch PARTIAL postings
-    statistics (term, df, cf). Same exactly-once contract as
-    run_incremental_link_graph: each micro-batch runs the identical
-    batch operator (search.term_postings) over only its files and
-    overwrites its own batch-keyed directory; the postings summary is
+    statistics (term, df, cf) under ``<out_dir>/postings`` (module
+    rule). Each micro-batch runs the identical batch operator
+    (search.term_postings) over only its files; the postings summary is
     algebraic (both counts are sums), so fold(partials) == one-shot
     build over everything drained — the retrieval index never
-    re-tokenizes the base corpus as the crawl grows."""
+    re-tokenizes the base corpus as the crawl grows. Returns the number
+    of micro-batches processed in this drain."""
     from hebrew_ner_spark.operators import search
 
-    postings_dir = os.path.join(out_dir, "postings")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(postings_dir):
-        import shutil
-
-        shutil.rmtree(postings_dir)
-
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _, written = _drain(
+        _files(spark, PAGES_SCHEMA, src_dir),
+        os.path.join(out_dir, "postings"),
+        checkpoint_dir,
+        lambda batch_df, _: search.term_postings(
+            batch_df.select(F.xxhash64("url").alias("doc_id"), "text")
+        ),
     )
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        n_batches["n"] += 1
-        docs = batch_df.select(F.xxhash64("url").alias("doc_id"), "text")
-        (
-            search.term_postings(docs)
-            .write.mode("overwrite")
-            .parquet(os.path.join(postings_dir, f"batch_id={batch_id}"))
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
+    return len(written)
 
 
 def read_postings(spark: SparkSession, out_dir: str) -> DataFrame:
     """Fold the per-batch partial postings into the index (one term-keyed
     aggregate — the merge_postings algebra applied across all partials).
-    Empty drains fold to an empty index, same reader-side PATH_NOT_FOUND
-    contract as read_link_graph."""
-    from pyspark.errors import AnalysisException
-
+    Empty drains fold to an empty index, as in read_link_graph."""
     postings_dir = os.path.join(out_dir, "postings")
-    try:
-        partials = spark.read.parquet(postings_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
+    if not fs.exists(spark, postings_dir):
         return spark.createDataFrame([], "term string, df long, cf long")
-    return partials.groupBy("term").agg(
-        F.sum("df").cast("long").alias("df"),
-        F.sum("cf").cast("long").alias("cf"),
+    return (
+        spark.read.parquet(postings_dir)
+        .groupBy("term")
+        .agg(
+            F.sum("df").cast("long").alias("df"),
+            F.sum("cf").cast("long").alias("cf"),
+        )
     )
 
 
@@ -379,7 +333,7 @@ def run_attribution_join(
     than watermark - window are evicted instead of buffered forever,
     which is the entire point of watermarked stream-stream joins at
     10^12-event scale (unbounded state is the naive join's failure
-    mode). Append output; availableNow drains.
+    mode). Append output at ``out_dir`` (module rule).
 
     Cross-batch correctness contract (pytest-pinned): a click arriving
     in a later micro-batch still finds views from earlier batches while
@@ -388,9 +342,7 @@ def run_attribution_join(
     every in-window pair alive until matched.
     """
     clicks = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(clicks_dir)
+        _files(spark, EVENTS_SCHEMA, clicks_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -400,9 +352,7 @@ def run_attribution_join(
         .withWatermark("click_ts", "1 hour")
     )
     views = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(views_dir)
+        _files(spark, EVENTS_SCHEMA, views_dir)
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -426,16 +376,7 @@ def run_attribution_join(
         F.unix_millis("click_ts").alias("click_ms"),
         F.unix_millis("view_ts").alias("view_ms"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _drain(joined, out_dir, checkpoint_dir)
 
 
 CHANGES_SCHEMA = (
@@ -456,18 +397,16 @@ def run_streaming_mv(
     Per batch N the sink reads the MV as of batch N-1 (an immutable
     batch-versioned snapshot — exactly the Iceberg snapshot discipline),
     applies ``maintenance.mv_delta(base, batch)`` via
-    ``apply_mv_delta``, and overwrites ``mv/batch_id=N`` with the FULL
-    post-batch MV. A replayed batch therefore rewrites its own version
-    from its immutable predecessor: exactly-once per checkpoint
-    lifetime, same contract as the other sinks here. Retraction
+    ``apply_mv_delta``, and writes the FULL post-batch MV as
+    ``<out_dir>/mv/batch_id=N`` (module rule): a replayed batch rewrites
+    its own version from its immutable predecessor. Retraction
     pre-images come from the original base under the CDC batch's
     one-change-per-key contract (each key appears in at most one batch),
     so no base-table versioning is needed in the fold.
 
-    Returns the last batch id (the current MV version).
+    Returns the last batch id written in this drain (the current MV
+    version), or -1 if no batch was.
     """
-    import shutil
-
     from hebrew_ner_spark.operators.maintenance import (
         apply_mv_delta,
         mv_delta,
@@ -475,17 +414,8 @@ def run_streaming_mv(
     )
 
     mv_dir = os.path.join(out_dir, "mv")
-    if not os.path.exists(checkpoint_dir) and os.path.exists(mv_dir):
-        shutil.rmtree(mv_dir)
 
-    stream = (
-        spark.readStream.schema(CHANGES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    last = {"id": -1}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, batch_id: int) -> DataFrame:
         base = spark.read.parquet(base_path)
         if batch_id == 0:
             prev = orders_mv(base)
@@ -493,20 +423,12 @@ def run_streaming_mv(
             prev = spark.read.parquet(
                 os.path.join(mv_dir, f"batch_id={batch_id - 1}")
             )
-        new = apply_mv_delta(prev, mv_delta(base, batch_df))
-        new.write.mode("overwrite").parquet(
-            os.path.join(mv_dir, f"batch_id={batch_id}")
-        )
-        last["id"] = batch_id
+        return apply_mv_delta(prev, mv_delta(base, batch_df))
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _, written = _drain(
+        _files(spark, CHANGES_SCHEMA, src_dir), mv_dir, checkpoint_dir, fold
     )
-    q.awaitTermination()
-    return last["id"]
+    return written[-1] if written else -1
 
 
 DEDUP_WM_DELAY = "1 hour"
@@ -524,24 +446,15 @@ def run_bounded_stream_dedup(
     BEYOND the horizon re-emits — which is not a bug but the documented
     contract, and exactly what the gate pins: near re-landings (within
     the delay) are dropped, far ones (days later) re-emit, both
-    deterministically under in-order arrival."""
+    deterministically under in-order arrival. Append output at
+    ``out_dir`` (module rule)."""
     stream = (
-        spark.readStream.schema(DOCS_SCHEMA + ", ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        _files(spark, DOCS_SCHEMA + ", ts timestamp", src_dir)
         .withWatermark("ts", DEDUP_WM_DELAY)
         .dropDuplicatesWithinWatermark(["doc_id"])
         .select("doc_id", F.unix_millis("ts").alias("ts_ms"))
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q, _ = _drain(stream, out_dir, checkpoint_dir)
     # recentProgress carries per-micro-batch stateOperators metrics
     # (numRowsTotal etc.) — the soak test asserts bounded-state growth
     # from these; gates ignore the return value
@@ -567,9 +480,10 @@ def run_stateful_sessions(
 
     Emitted rows: (user_id, sess_start_ms, sess_end_ms, n_events) with
     sess_end_ms = last event + gap (the session-window convention the
-    batch operator uses). Trailing sessions whose timeout the final
-    watermark never reaches stay in state, unemitted — part of the
-    gated semantics, exactly like the append-mode window gate.
+    batch operator uses), appended at ``out_dir`` (module rule).
+    Trailing sessions whose timeout the final watermark never reaches
+    stay in state, unemitted — part of the gated semantics, exactly
+    like the append-mode window gate.
     """
     from typing import Iterator, Tuple
 
@@ -579,9 +493,7 @@ def run_stateful_sessions(
     gap_ms = SESS_GAP_MIN * 60_000
 
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        _files(spark, EVENTS_SCHEMA, src_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", SESS_WM_DELAY)
         .select("user_id", "ts")
@@ -627,13 +539,5 @@ def run_stateful_sessions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q, _ = _drain(sessions, out_dir, checkpoint_dir)
     return list(q.recentProgress)

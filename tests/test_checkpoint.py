@@ -7,6 +7,7 @@ import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators import kg
@@ -107,3 +108,27 @@ def test_empty_stage_records_zero_rows(spark, tmp_path):
     assert r["processed"] == [0, 1]
     m = checkpoint.stage_metrics(spark, out, "ids").toPandas()
     assert list(m.n_rows) == [0, 0]
+
+
+def test_torn_ledger_row_is_redone(spark, tmp_path):
+    """A crash mid-append leaves an unterminated last ledger row: its
+    bucket never committed, so the rerun redoes it instead of raising,
+    and the ledger stays one row per line."""
+    out = str(tmp_path / "wh")
+    df = _tokens(spark)
+    checkpoint.run_stage(df, out, "tokens", key="doc_id", n_buckets=2)
+    ledger = checkpoint._lineage_path(out, "tokens")
+    rows = {json.loads(l)["part_id"]: l for l in open(ledger)}
+    with open(ledger, "w") as f:
+        f.write(rows[0] + rows[1][: len(rows[1]) // 2])
+
+    r = checkpoint.run_stage(df, out, "tokens", key="doc_id", n_buckets=2)
+    assert r["processed"] == [1]
+    assert [row["part_id"] for row in checkpoint.read_lineage(out, "tokens")] == [0, 1]
+    assert len(open(ledger).read().splitlines()) == 2
+
+    # a malformed row that did end its line is corruption, not a torn append
+    with open(ledger, "a") as f:
+        f.write('{"part_id": \n')
+    with pytest.raises(json.JSONDecodeError):
+        checkpoint.read_lineage(out, "tokens")

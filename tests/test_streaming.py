@@ -4,6 +4,7 @@ through the batch stage kernels, and watermarked event-time windows."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators import kg, relational
@@ -87,6 +88,68 @@ def test_incremental_sink_is_idempotent_under_replay(spark, tmp_path):
     shutil.rmtree(ckpt)
     incremental.run_incremental_triples(spark, src, out, ckpt)
     assert spark.read.parquet(f"{out}/triples").count() == both
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_lost_checkpoint_resets_output(spark, tmp_path, uri):
+    """A lost checkpoint starts a new output lifetime: after a shorter
+    replay only the replayed batches may remain, whether the paths are
+    plain or URIs (the reset goes through the Hadoop FileSystem)."""
+    src = str(tmp_path / "incoming")
+    os.makedirs(src)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    a = docs.where("doc_id < 40")
+    b = docs.where("doc_id >= 40 AND doc_id < 60")
+    _stage_wave(spark, src, "a.parquet", a, 1_700_000_000)
+    _stage_wave(spark, src, "b.parquet", b, 1_700_000_010)
+
+    def path(name):
+        p = str(tmp_path / name)
+        return "file://" + p if uri else p
+
+    def drain():
+        return incremental.run_incremental_triples(
+            spark, path("incoming"), path("out"), path("ckpt")
+        )
+
+    assert drain() == 2
+    shutil.rmtree(str(tmp_path / "ckpt"))
+    os.remove(os.path.join(src, "b.parquet"))
+    assert drain() == 1
+
+    triples = str(tmp_path / "out" / "triples")
+    batches = [d for d in os.listdir(triples) if d.startswith("batch_id=")]
+    assert batches == ["batch_id=0"]
+    want = kg.doc_triples(a)
+    got = spark.read.parquet(path("out") + "/triples").select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
+def test_bounded_dedup_lost_checkpoint_keeps_new_rows(spark, tmp_path):
+    """The file sink skips batch ids its metadata log already committed:
+    a drain restarted on a lost checkpoint must reset its output, or the
+    rows landed since are silently dropped."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+
+    def wave(name, ids, mtime):
+        df = spark.createDataFrame(
+            [(k, "t", "en", "s", 1) for k in ids],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        ).withColumn("ts", F.expr("TIMESTAMP '2024-01-01 00:00:00'"))
+        _stage_wave(spark, src, name, df, mtime)
+
+    wave("a.parquet", [1, 2, 3], 1_700_000_000)
+    incremental.run_bounded_stream_dedup(spark, src, out, ckpt)
+    shutil.rmtree(ckpt)
+    wave("b.parquet", [4, 5], 1_700_000_010)
+    incremental.run_bounded_stream_dedup(spark, src, out, ckpt)
+    ids = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert ids == [1, 2, 3, 4, 5]
 
 
 def test_windowed_event_counts_match_batch_up_to_watermark(spark, tmp_path):
