@@ -6,9 +6,11 @@ Reference parity map (SURVEY.md §2):
 * P11 splitting           -> ``size(split(label, '\\^'))``
 * J2+A4 origins merge     -> groupBy (doc, token) + order-explicit
                              ``concat_ws('^', ...)`` (ner.py:145-160)
-* P10 multi->single       -> vectorized pandas UDF over
+* P10 multi->single       -> Arrow helper ``_validate_distinct`` over
                              functions/labels.validate_multi_to_single
-                             (ner.py:177-222, quirks preserved)
+                             (ner.py:177-222, quirks preserved): once per
+                             distinct label, behind the ``validate_multi_udf``
+                             arrow_udf and inside the fused hybrid kernel
 * E9 scheme converters    -> BIOES->BIO is a pure projection; BIO->BIOES
                              needs lead() over (doc, word_index)
                              (tagSchemeConverter.py:14-110)
@@ -24,9 +26,11 @@ a real analyzer drops into the same column contract as a pandas UDF.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from hebrew_ner_spark.functions.labels import validate_multi_to_single
 from hebrew_ner_spark.operators import kg
@@ -133,26 +137,37 @@ def merge_morph_to_token(mlabels: DataFrame, reverse: bool = False) -> DataFrame
     return merged
 
 
-def validate_multi_udf(col):
-    """P10 as an Arrow-vectorized kernel (ner.py:177-222).
+def _validate_distinct(multi: pa.Array) -> pa.Array:
+    """P10 over an Arrow string array (ner.py:177-222): each DISTINCT
+    multi-label is validated once and the results are taken back to row
+    order. Validation is a pure function of the string and real corpora
+    draw labels from a tiny repertoire, so this cuts the Python cost from
+    O(rows) to O(distinct) (measured ~45 s -> ~2 s on the 1M-doc hybrid
+    chain's final pass). A null label raises, as the reference's per-row
+    path crashes on it too."""
+    if multi.null_count:
+        raise ValueError("validate_multi_udf: null multi_label")
+    enc = pc.dictionary_encode(multi)
+    single = pa.array(
+        [validate_multi_to_single(u)[0] for u in enc.dictionary.to_pylist()],
+        pa.string(),
+    )
+    return single.take(enc.indices)
 
-    The pandas_udf is built lazily at call time: creating it at module
-    import would require an active SparkSession, which breaks the
+
+def validate_multi_udf(col):
+    """P10 as a scalar Arrow UDF around ``_validate_distinct``; the fused
+    hybrid kernel (``lattice.prune_merge_validate``) calls the helper
+    directly instead.
+
+    The UDF is built lazily at call time: creating it at module import
+    would require an active SparkSession, which breaks the
     import-before-session order under spark-submit --py-files.
     """
 
-    @pandas_udf("string")
-    def _validate(multi: pd.Series) -> pd.Series:
-        # Per-batch unique-memo: validation is a pure function of the
-        # multi-label string and real corpora draw labels from a tiny
-        # repertoire, so computing once per distinct value cuts the
-        # Python cost from O(rows) to O(distinct) (measured ~45 s ->
-        # ~2 s on the 1M-doc hybrid chain's final pass). A null label
-        # still raises (the old per-row path crashed on it too).
-        if multi.isna().any():
-            raise ValueError("validate_multi_udf: null multi_label")
-        memo = {u: validate_multi_to_single(u)[0] for u in multi.unique()}
-        return multi.map(memo)
+    @arrow_udf("string")
+    def _validate(multi: pa.Array) -> pa.Array:
+        return _validate_distinct(multi)
 
     return _validate(col)
 

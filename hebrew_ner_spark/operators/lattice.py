@@ -3,11 +3,22 @@
 The reference models each token's morphological analyses as a small DAG
 (lattice) and prunes it with NER splitting evidence (G1-G3,
 utils/yap_graph.py:23-105). Spark disposition (SURVEY.md §2.7): the
-sub-lattices are tiny (<= ~30 vertices), so the correct idiom is a
-sorted ``mapInPandas`` scanning (doc, token) group boundaries inside
-each Arrow batch and running the single-node DFS per group — a
-distributed graph framework would be pure overhead here, and per-group
-pandas frames (applyInPandas) cost ~1 ms of overhead per document.
+sub-lattices are tiny (<= ~30 vertices), so the DFS runs single-node
+per token group inside Arrow batches — a distributed graph framework
+would be pure overhead here, and per-group pandas frames
+(applyInPandas) cost ~1 ms of overhead per document. Two batch grains:
+
+* token grain — the fused hybrid chain (``prune_merge_validate``) ships
+  one row per token with its lattice as list columns to ``mapInArrow``;
+  group bounds are the list offsets, and the kernel also '^'-merges and
+  validates the labels, so the chain has one Python boundary;
+* edge grain — ``prune_lattice`` and ``prune_merge_labels`` take edge
+  rows through ``mapInPandas``, scanning (doc, token) group boundaries
+  inside each batch and carrying a split trailing group forward.
+
+Both grains share the memoized DFS keep-pattern (``_keep_pattern``),
+and both fused entry points share the prune-and-join core
+(``_prune_join``).
 
 Design notes for 100 TB:
 * the lattice edge table is generated array-side (constant-folded CASE per
@@ -28,10 +39,13 @@ from typing import Dict, Iterator, List
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hebrew_ner_spark.operators import kg
+from hebrew_ner_spark.operators.labels import _validate_distinct
 from hebrew_ner_spark.resources import MORPH_SPLITS
 
 EDGE_SCHEMA = (
@@ -254,75 +268,137 @@ def prune_lattice(lattice: DataFrame, splitting: DataFrame) -> DataFrame:
     return part.mapInPandas(_carry_groups(_process), EDGE_SCHEMA)
 
 
+def _prune_join(
+    memo: dict,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    fv: np.ndarray,
+    tv: np.ndarray,
+    splitting: np.ndarray,
+    labels: pa.Array,
+) -> tuple[np.ndarray, pa.Array]:
+    """DFS-prune each token group and '^'-join its surviving labels.
+
+    Group ``g`` is edges ``starts[g]:ends[g]`` of the flat per-edge
+    ``fv``/``tv``/``labels`` arrays, with NER evidence ``splitting[g]``.
+    A 1-edge lattice always keeps its edge (exact-length when splitting
+    == 1, keep-all fallback otherwise), so only multi-edge groups run
+    the memoized DFS. Returns ``(has, joined)``: ``has`` marks the groups
+    with at least one surviving non-null label, ``joined`` holds those
+    groups' labels '^'-joined in edge order. Both fused entry points
+    (``prune_merge_labels``, ``prune_merge_validate``) call this."""
+    keep = labels.is_valid().to_numpy(zero_copy_only=False, writable=True)
+    multi = ends - starts > 1
+    for s, e, sp in zip(
+        starts[multi].tolist(), ends[multi].tolist(), splitting[multi].tolist()
+    ):
+        keep[s:e] &= _keep_pattern(memo, fv[s:e], tv[s:e], sp)
+    cum = np.concatenate(([0], np.cumsum(keep)))
+    counts = cum[ends] - cum[starts]
+    has = counts > 0
+    offsets = pa.array(np.concatenate(([0], np.cumsum(counts[has]))), pa.int32())
+    kept = pa.ListArray.from_arrays(offsets, labels.filter(pa.array(keep)))
+    return has, pc.binary_join(kept, "^")
+
+
 MERGED_SCHEMA = "doc_id long, word_index long, multi_label string"
 
 
 def prune_merge_labels(edge_rows: DataFrame) -> DataFrame:
-    """Fused G1-G3 DFS prune + J2/A4 label merge for the hybrid lifecycle.
+    """Fused G1-G3 DFS prune + J2/A4 label merge at EDGE grain.
 
-    ``edge_rows`` is EDGE-grain (doc_id, word_index, edge_order, from_v,
-    to_v, mlabel, splitting) with each (doc_id, word_index) group
-    contiguous and in edge_order within its partition — document order
-    out of ``posexplode`` qualifies, so NO shuffle or sort is required
-    upstream. Output is TOKEN-grain (doc_id, word_index, multi_label):
-    each token's lattice is DFS-pruned (``prune_edge_group``, the
-    reference's semantics at yap_graph.py:86-105) and the mlabels of the
-    surviving labelled edges are '^'-joined in edge order — exactly the
-    md⋈mlabels inner join + ordered concat aggregate (ner.py:145-160),
-    minus their two shuffles. Tokens whose surviving edges carry no
-    mlabel emit nothing (the inner-join-drops-all case).
+    ``edge_rows`` is (doc_id, word_index, edge_order, from_v, to_v,
+    mlabel, splitting) with each (doc_id, word_index) group contiguous
+    and in edge_order within its partition — document order out of
+    ``explode`` qualifies, so NO shuffle or sort is required upstream.
+    Output is TOKEN-grain (doc_id, word_index, multi_label): each
+    token's lattice is DFS-pruned (``prune_edge_group``, the reference's
+    semantics at yap_graph.py:86-105) and the mlabels of the surviving
+    labelled edges are '^'-joined in edge order — exactly the md⋈mlabels
+    inner join + ordered concat aggregate (ner.py:145-160), minus their
+    two shuffles. Tokens whose surviving edges carry no mlabel emit
+    nothing (the inner-join-drops-all case).
 
-    This kernel is why the 1M-doc hybrid chain went from 6 shuffled
-    stages to a single zero-exchange pass; the keep-pattern memo and the
-    single-edge fast path keep per-group Python near zero.
+    ``hybrid_pipeline`` ships token rows to ``prune_merge_validate``
+    instead; this edge-grain form serves callers that already hold edge
+    rows. Both share ``_prune_join``.
     """
     memo: dict = {}
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc = pdf["doc_id"].to_numpy()
-        wi = pdf["word_index"].to_numpy()
-        fv = pdf["from_v"].to_numpy()
-        tv = pdf["to_v"].to_numpy()
-        sp = pdf["splitting"].to_numpy()
-        lab = pdf["mlabel"].to_numpy(dtype=object)
         starts, ends = _group_bounds(pdf)
-        sizes = ends - starts
-        single = sizes == 1
-
-        # fast path (vectorized): a 1-edge lattice always keeps its edge
-        # (exact-length when splitting == 1, keep-all fallback otherwise)
-        s_idx = starts[single]
-        s_idx = s_idx[pd.notna(lab[s_idx])]
-        out = [
-            pd.DataFrame(
-                {
-                    "doc_id": doc[s_idx],
-                    "word_index": wi[s_idx],
-                    "multi_label": lab[s_idx],
-                }
-            )
-        ]
-
-        o_doc: list = []
-        o_wi: list = []
-        o_ml: list = []
-        for s, e in zip(starts[~single], ends[~single]):
-            pattern = _keep_pattern(memo, fv[s:e], tv[s:e], int(sp[s]))
-            kept = lab[s:e][pattern]
-            kept = kept[pd.notna(kept)]
-            if len(kept):
-                o_doc.append(doc[s])
-                o_wi.append(wi[s])
-                o_ml.append("^".join(kept))
-        if o_ml:
-            out.append(
-                pd.DataFrame(
-                    {"doc_id": o_doc, "word_index": o_wi, "multi_label": o_ml}
-                )
-            )
-        return pd.concat(out, ignore_index=True) if len(out) > 1 else out[0]
+        has, joined = _prune_join(
+            memo,
+            starts,
+            ends,
+            pdf["from_v"].to_numpy(),
+            pdf["to_v"].to_numpy(),
+            pdf["splitting"].to_numpy()[starts],
+            pa.array(pdf["mlabel"], pa.string(), from_pandas=True),
+        )
+        first = starts[has]
+        return pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].to_numpy()[first],
+                "word_index": pdf["word_index"].to_numpy()[first],
+                "multi_label": joined.to_numpy(zero_copy_only=False),
+            }
+        )
 
     return edge_rows.mapInPandas(_carry_groups(_process), MERGED_SCHEMA)
+
+
+TOKEN_LABEL_SCHEMA = "doc_id long, word_index long, label string"
+
+
+def prune_merge_validate(token_rows: DataFrame) -> DataFrame:
+    """The hybrid lifecycle's back half — G1-G3 DFS prune, J2/A4 label
+    merge and P10 validation — in one token-grain ``mapInArrow`` pass.
+
+    ``token_rows`` is (doc_id, word_index, splitting, fv, tv, ml): one
+    row per token, its lattice as parallel lists (edge from/to vertex and
+    the edge's morpheme label, null on the whole-token shortcut). Output
+    is (doc_id, word_index, label): the '^'-merge of the surviving
+    labelled edges (``_prune_join``) collapsed to one BIOSE label
+    (``labels._validate_distinct``). Tokens whose surviving edges carry
+    no label emit nothing, as in ``prune_merge_labels``.
+
+    A token is one row, so no group can straddle an Arrow batch (no
+    carry) and group bounds are the list offsets. Compared with shipping
+    exploded edge rows to ``prune_merge_labels`` and the result through
+    ``validate_multi_udf``, this removes the edge-grain row conversion
+    and the second Python round trip: the hybrid_morph job went from
+    1.29 s to 0.82 s (4-core VM, local[4]).
+    """
+    memo: dict = {}
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if not b.num_rows:
+                continue
+            fv = b.column("fv")
+            offsets = fv.offsets.to_numpy()
+            offsets = offsets - offsets[0]
+            has, joined = _prune_join(
+                memo,
+                offsets[:-1],
+                offsets[1:],
+                fv.flatten().to_numpy(),
+                b.column("tv").flatten().to_numpy(),
+                b.column("splitting").to_numpy(),
+                b.column("ml").flatten(),
+            )
+            mask = pa.array(has)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("doc_id").filter(mask),
+                    b.column("word_index").filter(mask),
+                    _validate_distinct(joined),
+                ],
+                names=["doc_id", "word_index", "label"],
+            )
+
+    return token_rows.mapInArrow(_run, TOKEN_LABEL_SCHEMA)
 
 
 def filter_lattice_by_edges(lattice: DataFrame, valid_edges: DataFrame) -> DataFrame:

@@ -22,9 +22,10 @@ Louvain; the same parity trick symbreak.py uses for coloring):
       val(A)      = 2m * k_{i,A\\i} - k_i * (Sigma_tot(A) - k_i)
 
   (the standard delta-Q numerators scaled by the constant 4m^2 — every
-  term a BIGINT). The vertex adopts argmax val with ties broken
-  (stay first, then smaller community id), so a fixpoint means no
-  strictly-improving move exists — exactly phase-1 termination.
+  term a BIGINT, the value exact in DECIMAL(38,0): ``modularity_gain``).
+  The vertex adopts argmax val with ties broken (stay first, then
+  smaller community id), so a fixpoint means no strictly-improving move
+  exists — exactly phase-1 termination.
 
 What the gates certify: the full 12-round deterministic schedule
 (partition after the budget) AND the modularity pieces of the final
@@ -50,6 +51,23 @@ from pyspark.sql import Window
 from hebrew_ner_spark.plans.rounds import lineage_breaker
 
 LV_ROUNDS = 12
+
+
+def modularity_gain(is_cur) -> F.Column:
+    """val(C) = 2m * k_{i,C} - k_i * (Sigma_tot(C) - [C == A] * k_i) over
+    the columns m2, kic, k and stot; ``is_cur`` is the [C == A] test.
+
+    Exact in DECIMAL(38,0): each factor is a BIGINT, so each product is
+    below 2^126 < 10^38, and both products are non-negative, so their
+    difference fits too. In BIGINT the products pass 2^63 at 10^12 edges
+    and a hub of 10^7 neighbours: ANSI Spark fails the job there, and
+    non-ANSI Spark wraps them silently into a wrong argmax."""
+
+    def d(c):
+        return F.col(c).cast("decimal(20,0)")
+
+    own = F.when(is_cur, d("k")).otherwise(F.lit(0).cast("decimal(20,0)"))
+    return d("m2") * d("kic") - d("k") * (d("stot") - own)
 
 
 def louvain_phase1(und: DataFrame, rounds: int = LV_ROUNDS) -> DataFrame:
@@ -98,16 +116,7 @@ def louvain_phase1(und: DataFrame, rounds: int = LV_ROUNDS) -> DataFrame:
                 F.when(F.col("cand") == F.col("comm"), 1)
                 .otherwise(0)
                 .alias("is_cur"),
-                F.when(
-                    F.col("cand") == F.col("comm"),
-                    F.col("m2") * F.col("kic")
-                    - F.col("k") * (F.col("stot") - F.col("k")),
-                )
-                .otherwise(
-                    F.col("m2") * F.col("kic") - F.col("k") * F.col("stot")
-                )
-                .cast("long")
-                .alias("val"),
+                modularity_gain(F.col("cand") == F.col("comm")).alias("val"),
             )
         )
         best = (

@@ -3,10 +3,10 @@
     tokens -> multi-tag mention labels        (M9 / J2+A4 merge)
            -> splitting evidence              (P11)
            -> ambiguous lattice               (S14 analog)
-           -> DFS prune by splitting          (G1-G3, batched mapInPandas)
+           -> DFS prune by splitting          (G1-G3)
            -> disambiguated morphemes (MD)    (md_to_origins analog)
            -> morpheme-level labels           (join J2)
-           -> '^'-merge + validate-to-single  (A4 + P10 UDF)
+           -> '^'-merge + validate-to-single  (A4 + P10)
 
 The end-to-end invariant — the same one the reference's parametrized
 golden corpus asserts for its hybrid model (ner_app_test.py:51-81) —
@@ -16,15 +16,18 @@ in between (lattice DFS included) must be collectively lossless.
 
 Two registered plans share the oracle:
 
-* ``hybrid_pipeline`` — the FUSED plan (round 5). Every stage above is
-  per-document row-local (BIOSE labelling is an array ``transform``,
-  morph refinement and the lattice are per-token CASE arrays, the DFS
-  prune + label merge is one group-contiguous mapInPandas kernel), so
-  the whole lifecycle compiles to a single zero-exchange pass:
-  scan -> codegen -> prune_merge_labels -> validate UDF. The staged
-  plan paid 6 shuffles at 100M-row grain for data that never needed to
-  move; at the 1M-doc bench corpus the fusion took the chain from
-  ~212 s to single-digit seconds and restored linear scaling.
+* ``hybrid_pipeline`` — the FUSED plan. Every stage above is
+  per-token row-local (BIOSE labelling is an array ``transform``, morph
+  refinement and the lattice are per-token CASE arrays), so the chain
+  compiles to a single zero-exchange pass with one Python boundary:
+  scan -> codegen -> prune_merge_validate. The JVM side ships one row
+  per token with its lattice as list columns; the ``mapInArrow`` kernel
+  (operators/lattice.py) prunes, '^'-merges and validates each token in
+  one pass. The staged plan paid 6 shuffles at 100M-row grain for data
+  that never needed to move (fusing them took the 1M-doc chain from
+  ~212 s to single-digit seconds); shipping exploded edge rows through a
+  mapInPandas kernel and a second validate UDF then spent ~3/4 of the
+  fused job on the Python side of two boundaries.
 * ``hybrid_pipeline_staged`` — the operator-by-operator composition
   (morph_labels -> merge -> splitting -> build_lattice -> prune_lattice
   -> md_from_pruned -> join -> merge -> validate), kept registered so
@@ -79,38 +82,26 @@ def hybrid_pipeline(spark, sf_dir):
         "l_arr", F.expr(labels.refined_label_array_expr())
     )
 
-    # 4: ambiguous lattice as edge rows WITH the splitting evidence and
-    # each chain-edge's morpheme label attached — the explicit
-    # (doc, word) equi-join of the staged plan collapses into a
-    # same-row column pick (chain edge i <-> morpheme i; the shortcut
-    # edge carries no mlabel, mirroring the staged inner join)
-    edge_rows = tok.select(
+    # 4: each token's ambiguous lattice as parallel lists on the token
+    # row, with the splitting evidence and each chain edge's morpheme
+    # label (chain edge i <-> morpheme i; the shortcut edge carries no
+    # label, mirroring the staged inner join) — one projection, nothing
+    # exploded
+    token_rows = tok.withColumn("lat", F.expr(lattice._lattice_case_expr())).select(
         "doc_id",
         "word_index",
         F.size("l_arr").cast("long").alias("splitting"),
-        "l_arr",
-        F.explode(F.expr(lattice._lattice_case_expr())).alias("e"),
-    ).select(
-        "doc_id",
-        "word_index",
-        F.col("e.edge_order").alias("edge_order"),
-        F.col("e.from_v").alias("from_v"),
-        F.col("e.to_v").alias("to_v"),
+        F.expr("transform(lat, e -> e.from_v)").alias("fv"),
+        F.expr("transform(lat, e -> e.to_v)").alias("tv"),
         F.expr(
-            "CASE WHEN e.edge_order < size(l_arr) THEN l_arr[e.edge_order] END"
-        ).alias("mlabel"),
-        "splitting",
+            "transform(lat, e -> CASE WHEN e.edge_order < size(l_arr)"
+            " THEN l_arr[e.edge_order] END)"
+        ).alias("ml"),
     )
 
-    # 5-7: DFS prune + ordered '^'-merge in one group-contiguous kernel
-    # (posexplode output is already group-contiguous — no shuffle), then
-    # multi->single validation (P10)
-    merged = lattice.prune_merge_labels(edge_rows)
-    return merged.select(
-        "doc_id",
-        "word_index",
-        labels.validate_multi_udf("multi_label").alias("label"),
-    )
+    # 5-7: DFS prune + ordered '^'-merge + multi->single validation (P10)
+    # in one token-grain Arrow kernel — the only Python in the plan
+    return lattice.prune_merge_validate(token_rows)
 
 
 @query("hybrid_pipeline_staged", oracle=_ORACLE)

@@ -19,10 +19,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine from PYTHONPATH, not from sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 SF01 = "/root/testdata/sf0.1"
-SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.benchdata/sf1")
+SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".benchdata", "sf1"))
 REPS = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
 # override for targeted re-measurement of slow rows: a first sample above
 # this bound is recorded as a single COLD sample (not comparable with a
@@ -65,7 +68,6 @@ HEADLINES = [
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
     from bench import force
     from hebrew_ner_spark.bench_corpus import build_replicated
     from hebrew_ner_spark.queries import QUERIES
@@ -143,7 +145,7 @@ def main() -> None:
     # (the r4 occupancy diagnostics and the 30-gate extended sweep), so
     # round-over-round deltas stay comparable in one file
     try:
-        with open("/root/repo/BENCH_SF1.json") as f:
+        with open(os.path.join(ROOT, "BENCH_SF1.json")) as f:
             prev = json.load(f)
         for k in ("ssjoin_diag", "queries_extended"):
             if k in prev and k not in out:
@@ -155,7 +157,7 @@ def main() -> None:
         "exact similarity joins; ssjoin_diag/queries_extended carried from "
         "the r4 artifact for comparison"
     )
-    with open("/root/repo/BENCH_SF1.json", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_SF1.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     spark.stop()

@@ -13,12 +13,16 @@ the remainder (ADVICE r2 #1).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine from PYTHONPATH, not from sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 ARGS = list(sys.argv[1:])
 JSON_OUT = None

@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from hebrew_ner_spark.functions import tokenizer as ours
 
@@ -120,7 +122,7 @@ def main() -> int:
                     print(f"TOK DIFF on {text!r}\n  ref={ref_toks!r}\n  got={my_toks!r}")
         goldens.append({"text": text, "sentences": ref_sents, "tokens": ref_toks})
 
-    with open("/root/repo/tests/fixtures/tokenizer_goldens.json", "w", encoding="utf-8") as f:
+    with open(os.path.join(ROOT, "tests", "fixtures", "tokenizer_goldens.json"), "w", encoding="utf-8") as f:
         json.dump(goldens, f, ensure_ascii=False, indent=1)
     print(f"{len(inputs)} cases; sent diffs: {n_sent_diff}, tok diffs: {n_tok_diff}")
     return 1 if (n_sent_diff or n_tok_diff) else 0

@@ -37,7 +37,10 @@ import os
 import random
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine from PYTHONPATH, not from sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 REPLICAS = 10
 O_OFF = 800_000      # max sf0.1 o_orderkey ~600k; 10 replicas stay < 10M
@@ -146,5 +149,5 @@ def build(src: str, out: str) -> None:
 
 if __name__ == "__main__":
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.benchdata/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".benchdata", "sf1")
     build(src, out)

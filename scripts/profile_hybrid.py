@@ -13,9 +13,12 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine from PYTHONPATH, not from sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
-SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.benchdata/sf1")
+SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".benchdata", "sf1"))
 TARGET = int(os.environ.get("PROFILE_DOCS", "1000000"))
 
 

@@ -103,3 +103,18 @@ def test_alphabet_encode_tiered_plan_and_identity(spark):
     full = lbl.alphabet_encode(docs)
     key = ["doc_id", "word_index"]
     assert tiered.orderBy(*key).collect() == full.orderBy(*key).collect()
+
+
+def test_validate_multi_udf_per_row_and_null(spark):
+    from pyspark.errors import PythonException
+
+    from hebrew_ner_spark.operators.labels import validate_multi_udf
+
+    tags = ["B-PER^E-PER", "O^O", "B-PER^E-PER", "E-PER^I-PER", "O"]
+    df = spark.createDataFrame([(t,) for t in tags], "multi_label string")
+    got = [r[0] for r in df.select(validate_multi_udf("multi_label")).collect()]
+    assert got == [validate_multi_to_single(t)[0] for t in tags]
+
+    nulls = spark.createDataFrame([("O",), (None,)], "multi_label string")
+    with pytest.raises(PythonException, match="null multi_label"):
+        nulls.select(validate_multi_udf("multi_label")).collect()

@@ -7,6 +7,7 @@
 """
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -14,6 +15,7 @@ import sys
 import duckdb
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_triples_pr_vs_oracle_at_least_095(spark):
@@ -38,7 +40,7 @@ def test_triples_pr_vs_oracle_at_least_095(spark):
 def test_pipeline_job_runs_and_resumes(tmp_path):
     out = str(tmp_path / "kg")
     cmd = [sys.executable, "scripts/run_pipeline.py", "--sf-dir", SF, "--out", out]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd="/root/repo")
+    r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd=ROOT)
     line = [l for l in r1.stdout.splitlines() if l.startswith("PIPELINE_SUMMARY ")]
     assert line, r1.stdout[-2000:] + r1.stderr[-2000:]
     s1 = json.loads(line[0].split(" ", 1)[1])
@@ -55,7 +57,7 @@ def test_pipeline_job_runs_and_resumes(tmp_path):
             if row["part_id"] != 3:
                 f.write(json.dumps(row) + "\n")
 
-    r2 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd="/root/repo")
+    r2 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd=ROOT)
     line = [l for l in r2.stdout.splitlines() if l.startswith("PIPELINE_SUMMARY ")]
     s2 = json.loads(line[0].split(" ", 1)[1])
     assert s2["stages"]["triples"]["processed"] == [3]       # only the lost bucket
@@ -69,7 +71,7 @@ def test_pipeline_job_runs_and_resumes(tmp_path):
     # snapshot version exists — the rerun must publish even though every
     # stage skips
     shutil.rmtree(f"{out}/graph")
-    r3 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd="/root/repo")
+    r3 = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd=ROOT)
     line = [l for l in r3.stdout.splitlines() if l.startswith("PIPELINE_SUMMARY ")]
     s3 = json.loads(line[0].split(" ", 1)[1])
     assert all(st["skipped"] for st in s3["stages"].values())
@@ -80,19 +82,19 @@ def test_spark_submit_py_files_ship_path(tmp_path):
     """The literal north-rule ship path: zip the package, run a job via
     the real spark-submit binary with --py-files, import the registry
     from the zip and execute queries that cross every runtime surface
-    (codegen chain + Arrow UDF + grouped decode)."""
-    import os
+    (codegen chain + Arrow UDF + grouped decode + the hybrid chain's
+    mapInArrow kernel)."""
     import zipfile
 
     import pyspark
 
     zip_path = str(tmp_path / "engine.zip")
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _, files in os.walk("/root/repo/hebrew_ner_spark"):
+        for root, _, files in os.walk(os.path.join(ROOT, "hebrew_ner_spark")):
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, "/root/repo"))
+                    zf.write(full, os.path.relpath(full, ROOT))
 
     job = tmp_path / "job.py"
     job.write_text(
@@ -101,7 +103,8 @@ def test_spark_submit_py_files_ship_path(tmp_path):
         "from hebrew_ner_spark.queries import QUERIES\n"
         f"n1 = QUERIES['kg_web_triples'](spark, '{SF}').count()\n"
         f"n2 = QUERIES['mention_model_nbest'](spark, '{SF}').count()\n"
-        "print('SHIP', n1, n2)\n"
+        f"n3 = QUERIES['hybrid_pipeline'](spark, '{SF}').count()\n"
+        "print('SHIP', n1, n2, n3)\n"
     )
     spark_submit = os.path.join(
         os.path.dirname(pyspark.__file__), "bin", "spark-submit"
@@ -112,5 +115,5 @@ def test_spark_submit_py_files_ship_path(tmp_path):
     )
     ship = [l for l in r.stdout.splitlines() if l.startswith("SHIP ")]
     assert ship, r.stdout[-1500:] + r.stderr[-1500:]
-    _, n1, n2 = ship[0].split()
-    assert int(n1) > 0 and int(n2) > 0
+    _, n1, n2, n3 = ship[0].split()
+    assert int(n1) > 0 and int(n2) > 0 and int(n3) > 0
