@@ -22,4 +22,8 @@ All dataflow is declared with the DataFrame API so Catalyst handles pushdown,
 pruning, join selection and AQE; Python only runs inside Arrow-batched UDFs.
 """
 
+from hebrew_ner_spark import zipcache
+
+zipcache.install()
+
 __version__ = "0.1.0"

@@ -11,8 +11,10 @@ reference's multi->single BIOSE collapse (utils/ner.py:177-222, itself
     category suffix is still appended -> the emitted label is '-CAT';
   * the relaxed fallback (reference Fig. 11) ignores order entirely.
 
-These run inside a vectorized pandas UDF (operators/labels.py); the pure
-functions here are also unit-tested directly against pinned cases.
+These run inside Arrow kernels (operators/labels.py, and the fused hybrid
+kernel operators/lattice.prune_merge_validate, which also calls
+``refine_token_label``); the pure functions here are also unit-tested
+directly against pinned cases.
 """
 
 from __future__ import annotations

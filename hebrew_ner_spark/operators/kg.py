@@ -88,6 +88,18 @@ def _sql_terms(terms: list[str]) -> str:
     return f"array({inner})"
 
 
+def doc_label_arrays(docs: DataFrame, terms: list[str] | None = None) -> DataFrame:
+    """(doc_id, toks, labels) — one row per document, its tokens and
+    their BIOSE labels as parallel arrays (codegen, no Python).
+
+    The source of the NER long table (``doc_token_labels``) and the input
+    of the fused hybrid kernel (``lattice.prune_merge_validate``).
+    """
+    return with_tokens(docs).select(
+        "doc_id", "toks", _biose_labels(F.col("toks"), terms).alias("labels")
+    )
+
+
 def doc_token_labels(docs: DataFrame, terms: list[str] | None = None) -> DataFrame:
     """(doc_id, word_index, token, label) — the NER long table.
 
@@ -95,8 +107,7 @@ def doc_token_labels(docs: DataFrame, terms: list[str] | None = None) -> DataFra
     `labels` column would instead come from the mapInPandas kernel in
     operators/mentions.py — the table contract is identical.
     """
-    labelled = with_tokens(docs).withColumn("labels", _biose_labels(F.col("toks"), terms))
-    return labelled.select(
+    return doc_label_arrays(docs, terms).select(
         "doc_id",
         F.posexplode(F.arrays_zip("toks", "labels")).alias("word_index", "tl"),
     ).select(

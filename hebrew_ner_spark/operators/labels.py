@@ -11,6 +11,8 @@ Reference parity map (SURVEY.md §2):
                              (ner.py:177-222, quirks preserved): once per
                              distinct label, behind the ``validate_multi_udf``
                              arrow_udf and inside the fused hybrid kernel
+                             (``lattice.prune_merge_validate``, once per
+                             distinct (token, label) of a batch)
 * E9 scheme converters    -> BIOES->BIO is a pure projection; BIO->BIOES
                              needs lead() over (doc, word_index)
                              (tagSchemeConverter.py:14-110)
@@ -63,8 +65,10 @@ def refined_label_array_expr(
 ) -> str:
     """SQL expr: per-token array of morpheme-level BIOSE labels — the
     token label refined positionally over the token's morphemes
-    (S -> B I* E etc.). Shared by ``morph_labels`` (morpheme-row grain)
-    and the fused hybrid chain (array grain, querydefs/hybrid_q.py)."""
+    (S -> B I* E etc.), used by ``morph_labels``. The fused hybrid
+    kernel (``lattice.prune_merge_validate``) applies the same rule in
+    Python, ``functions/labels.refine_token_label``, once per distinct
+    (token, label); tests/test_hybrid_fused.py pins the two equal."""
     k = f"size({_morph_case_expr(token_col)})"
     label = label_col
     return f"""
@@ -158,7 +162,7 @@ def _validate_distinct(multi: pa.Array) -> pa.Array:
 def validate_multi_udf(col):
     """P10 as a scalar Arrow UDF around ``_validate_distinct``; the fused
     hybrid kernel (``lattice.prune_merge_validate``) calls the helper
-    directly instead.
+    directly on its distinct (token, label) merges instead.
 
     The UDF is built lazily at call time: creating it at module import
     would require an active SparkSession, which breaks the

@@ -8,10 +8,14 @@ per token group inside Arrow batches — a distributed graph framework
 would be pure overhead here, and per-group pandas frames
 (applyInPandas) cost ~1 ms of overhead per document. Two batch grains:
 
-* token grain — the fused hybrid chain (``prune_merge_validate``) ships
-  one row per token with its lattice as list columns to ``mapInArrow``;
-  group bounds are the list offsets, and the kernel also '^'-merges and
-  validates the labels, so the chain has one Python boundary;
+* doc grain — the fused hybrid chain (``prune_merge_validate``) ships
+  one row per document with its tokens and labels as arrays to
+  ``mapInArrow``, so a batch holds whole documents (as in
+  operators/mentions.py). A token's output is a pure function of its
+  (token, label), so each DISTINCT pair is built into its lattice
+  (``_token_lattice``), pruned, '^'-merged and validated once per
+  batch, and the results are taken back to token order: the chain has
+  one Python boundary and no JVM-side per-token rows;
 * edge grain — ``prune_lattice`` and ``prune_merge_labels`` take edge
   rows through ``mapInPandas``, scanning (doc, token) group boundaries
   inside each batch and carrying a split trailing group forward.
@@ -44,6 +48,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hebrew_ner_spark.functions.labels import refine_token_label
 from hebrew_ner_spark.operators import kg
 from hebrew_ner_spark.operators.labels import _validate_distinct
 from hebrew_ner_spark.resources import MORPH_SPLITS
@@ -124,28 +129,37 @@ def prune_edge_group(edges: List[tuple], split: int, fallback: bool) -> set:
     return valid
 
 
-def _lattice_case_expr() -> str:
-    """CASE expr: token -> array<struct<edge_order,from_v,to_v,form>>.
+def _token_lattice(token: str) -> list[tuple[int, int, int, str]]:
+    """A token's ambiguous lattice as (edge_order, from_v, to_v, form)
+    edges — the analyzer stand-in, shared by the JVM CASE
+    (``_lattice_case_expr``) and the fused kernel.
 
-    Split tokens get an ambiguous 2-path lattice (morpheme chain 0->1->2
-    plus the whole-token shortcut 0->2); others a single edge 0->1.
+    Split tokens get a 2-path lattice (morpheme chain 0->1->...->k plus
+    the whole-token shortcut 0->k); others a single edge 0->1.
     """
-    whens = []
-    for tok, morphs in MORPH_SPLITS.items():
-        k = len(morphs)
-        structs = [
-            f"named_struct('edge_order', {i}L, 'from_v', {i}L, 'to_v', {i + 1}L, 'form', '{m}')"
-            for i, m in enumerate(morphs)
-        ]
-        structs.append(
-            f"named_struct('edge_order', {k}L, 'from_v', 0L, 'to_v', {k}L, 'form', '{tok}')"
-        )
-        whens.append(f"WHEN '{tok}' THEN array({', '.join(structs)})")
-    return (
-        "CASE token "
-        + " ".join(whens)
-        + " ELSE array(named_struct('edge_order', 0L, 'from_v', 0L, 'to_v', 1L, 'form', token)) END"
+    morphs = MORPH_SPLITS.get(token)
+    if morphs is None:
+        return [(0, 0, 1, token)]
+    k = len(morphs)
+    return [(i, i, i + 1, m) for i, m in enumerate(morphs)] + [(k, 0, k, token)]
+
+
+def _lattice_case_expr() -> str:
+    """CASE expr: token -> array<struct<edge_order,from_v,to_v,form>>,
+    generated from ``_token_lattice``."""
+
+    def arr(edges, plain: bool) -> str:
+        # a plain token's single edge carries the token column as its form
+        return "array(" + ", ".join(
+            f"named_struct('edge_order', {o}L, 'from_v', {f}L, 'to_v', {t}L,"
+            f" 'form', {'token' if plain else repr(m)})"
+            for o, f, t, m in edges
+        ) + ")"
+
+    whens = " ".join(
+        f"WHEN '{tok}' THEN {arr(_token_lattice(tok), False)}" for tok in MORPH_SPLITS
     )
+    return f"CASE token {whens} ELSE {arr(_token_lattice(''), True)} END"
 
 
 def build_lattice(docs: DataFrame) -> DataFrame:
@@ -319,7 +333,7 @@ def prune_merge_labels(edge_rows: DataFrame) -> DataFrame:
     two shuffles. Tokens whose surviving edges carry no mlabel emit
     nothing (the inner-join-drops-all case).
 
-    ``hybrid_pipeline`` ships token rows to ``prune_merge_validate``
+    ``hybrid_pipeline`` ships document rows to ``prune_merge_validate``
     instead; this edge-grain form serves callers that already hold edge
     rows. Both share ``_prune_join``.
     """
@@ -351,54 +365,92 @@ def prune_merge_labels(edge_rows: DataFrame) -> DataFrame:
 TOKEN_LABEL_SCHEMA = "doc_id long, word_index long, label string"
 
 
-def prune_merge_validate(token_rows: DataFrame) -> DataFrame:
-    """The hybrid lifecycle's back half — G1-G3 DFS prune, J2/A4 label
-    merge and P10 validation — in one token-grain ``mapInArrow`` pass.
+def prune_merge_validate(doc_rows: DataFrame) -> DataFrame:
+    """The hybrid lifecycle's back half — morph refinement, lattice,
+    G1-G3 DFS prune, J2/A4 label merge and P10 validation — in one
+    doc-grain ``mapInArrow`` pass.
 
-    ``token_rows`` is (doc_id, word_index, splitting, fv, tv, ml): one
-    row per token, its lattice as parallel lists (edge from/to vertex and
-    the edge's morpheme label, null on the whole-token shortcut). Output
-    is (doc_id, word_index, label): the '^'-merge of the surviving
-    labelled edges (``_prune_join``) collapsed to one BIOSE label
-    (``labels._validate_distinct``). Tokens whose surviving edges carry
-    no label emit nothing, as in ``prune_merge_labels``.
+    ``doc_rows`` is (doc_id, toks, labels): one row per document, its
+    tokens and their BIOSE labels as parallel arrays
+    (``kg.doc_label_arrays``). Output is (doc_id, word_index, label): per
+    token, the '^'-merge of its surviving labelled edges (``_prune_join``)
+    collapsed to one BIOSE label (``labels._validate_distinct``). Tokens
+    whose surviving edges carry no label emit nothing, as in
+    ``prune_merge_labels``; so does a document with null arrays.
 
-    A token is one row, so no group can straddle an Arrow batch (no
-    carry) and group bounds are the list offsets. Compared with shipping
-    exploded edge rows to ``prune_merge_labels`` and the result through
-    ``validate_multi_udf``, this removes the edge-grain row conversion
-    and the second Python round trip: the hybrid_morph job went from
-    1.29 s to 0.82 s (4-core VM, local[4]).
+    A token's output is a pure function of (token, label): the lattice
+    is per token (``_token_lattice``) and the refinement over its
+    morphemes per label (``refine_token_label``, the Python form of
+    ``refined_label_array_expr``). So each batch is flattened, each
+    DISTINCT pair is resolved once and the results are taken back to
+    token order. A contextual morph model would widen the key, not
+    change the pass. The JVM builds no per-token rows and Python
+    resolves a few thousand pairs per batch instead of every token: with
+    the zip-cache fix (hebrew_ner_spark/zipcache.py) the hybrid_morph
+    job's median went from 1.05 s (one token row per token, its lattice
+    as list columns) to 0.47 s (10 seed pairs, local[4], 4-core VM).
     """
     memo: dict = {}
 
+    def _resolve(pairs: list[tuple[str, str]]) -> pa.Array:
+        # one lattice group per (token, label): chain edge i carries
+        # morpheme label i, the whole-token shortcut none (the staged
+        # plan's inner join drops it)
+        fv, tv, ml, sizes, splitting = [], [], [], [], []
+        for token, label in pairs:
+            edges = _token_lattice(token)
+            mlabels = refine_token_label(label, len(MORPH_SPLITS.get(token, (token,))))
+            for order, f, t, _ in edges:
+                fv.append(f)
+                tv.append(t)
+                ml.append(mlabels[order] if order < len(mlabels) else None)
+            sizes.append(len(edges))
+            splitting.append(len(mlabels))
+        ends = np.cumsum(sizes)
+        has, joined = _prune_join(
+            memo,
+            ends - sizes,
+            ends,
+            np.array(fv, np.int64),
+            np.array(tv, np.int64),
+            np.array(splitting, np.int64),
+            pa.array(ml, pa.string()),
+        )
+        out = np.full(len(pairs), None, dtype=object)
+        out[has] = _validate_distinct(joined).to_numpy(zero_copy_only=False)
+        return pa.array(out, pa.string())
+
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            if not b.num_rows:
+            toks = b.column("toks")
+            n = pc.list_value_length(toks).fill_null(0).to_numpy()
+            # flatten() honours a sliced batch and null arrays; the word
+            # index restarts at each document's first token
+            doc = np.repeat(np.arange(len(n)), n)
+            if not len(doc):
                 continue
-            fv = b.column("fv")
-            offsets = fv.offsets.to_numpy()
-            offsets = offsets - offsets[0]
-            has, joined = _prune_join(
-                memo,
-                offsets[:-1],
-                offsets[1:],
-                fv.flatten().to_numpy(),
-                b.column("tv").flatten().to_numpy(),
-                b.column("splitting").to_numpy(),
-                b.column("ml").flatten(),
+            word_index = np.arange(len(doc)) - (np.cumsum(n) - n)[doc]
+            tok = pc.dictionary_encode(toks.flatten())
+            lab = pc.dictionary_encode(b.column("labels").flatten())
+            width = len(lab.dictionary)
+            key = tok.indices.to_numpy().astype(np.int64) * width + lab.indices.to_numpy()
+            uniq, inverse = np.unique(key, return_inverse=True)
+            ti, li = np.divmod(uniq, width)
+            pairs = list(
+                zip(tok.dictionary.take(ti).to_pylist(), lab.dictionary.take(li).to_pylist())
             )
-            mask = pa.array(has)
+            out = _resolve(pairs).take(inverse)
+            keep = out.is_valid()
             yield pa.RecordBatch.from_arrays(
                 [
-                    b.column("doc_id").filter(mask),
-                    b.column("word_index").filter(mask),
-                    _validate_distinct(joined),
+                    b.column("doc_id").take(doc).filter(keep),
+                    pa.array(word_index).filter(keep),
+                    out.filter(keep),
                 ],
                 names=["doc_id", "word_index", "label"],
             )
 
-    return token_rows.mapInArrow(_run, TOKEN_LABEL_SCHEMA)
+    return doc_rows.mapInArrow(_run, TOKEN_LABEL_SCHEMA)
 
 
 def filter_lattice_by_edges(lattice: DataFrame, valid_edges: DataFrame) -> DataFrame:

@@ -17,17 +17,18 @@ in between (lattice DFS included) must be collectively lossless.
 Two registered plans share the oracle:
 
 * ``hybrid_pipeline`` — the FUSED plan. Every stage above is
-  per-token row-local (BIOSE labelling is an array ``transform``, morph
-  refinement and the lattice are per-token CASE arrays), so the chain
-  compiles to a single zero-exchange pass with one Python boundary:
-  scan -> codegen -> prune_merge_validate. The JVM side ships one row
-  per token with its lattice as list columns; the ``mapInArrow`` kernel
-  (operators/lattice.py) prunes, '^'-merges and validates each token in
-  one pass. The staged plan paid 6 shuffles at 100M-row grain for data
-  that never needed to move (fusing them took the 1M-doc chain from
-  ~212 s to single-digit seconds); shipping exploded edge rows through a
-  mapInPandas kernel and a second validate UDF then spent ~3/4 of the
-  fused job on the Python side of two boundaries.
+  per-token row-local, and a token's output is a pure function of its
+  (token, label): the lattice is per token and the morph refinement per
+  label. So the chain compiles to a single zero-exchange pass with one
+  Python boundary: scan -> codegen -> prune_merge_validate. The JVM
+  side ships one row per document with its tokens and BIOSE labels as
+  arrays; the doc-grain ``mapInArrow`` kernel (operators/lattice.py)
+  resolves each distinct (token, label) of a batch once — lattice,
+  refinement, DFS prune, '^'-merge, validation — and takes the results
+  back to token order. The staged plan paid 6 shuffles at 100M-row
+  grain for data that never needed to move (fusing them took the 1M-doc
+  chain from ~212 s to single-digit seconds), and per-token rows built
+  in the JVM would only be shipped to Python.
 * ``hybrid_pipeline_staged`` — the operator-by-operator composition
   (morph_labels -> merge -> splitting -> build_lattice -> prune_lattice
   -> md_from_pruned -> join -> merge -> validate), kept registered so
@@ -75,33 +76,14 @@ _ORACLE = f"""
 def hybrid_pipeline(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
 
-    # 1-3: token BIOSE labels (array-side, zero shuffle), per-token
-    # morpheme-refined label array (= the '^'-merge evidence), and the
-    # splitting count — all columnar, one codegen stage
-    tok = kg.doc_token_labels(docs).withColumn(
-        "l_arr", F.expr(labels.refined_label_array_expr())
-    )
-
-    # 4: each token's ambiguous lattice as parallel lists on the token
-    # row, with the splitting evidence and each chain edge's morpheme
-    # label (chain edge i <-> morpheme i; the shortcut edge carries no
-    # label, mirroring the staged inner join) — one projection, nothing
-    # exploded
-    token_rows = tok.withColumn("lat", F.expr(lattice._lattice_case_expr())).select(
-        "doc_id",
-        "word_index",
-        F.size("l_arr").cast("long").alias("splitting"),
-        F.expr("transform(lat, e -> e.from_v)").alias("fv"),
-        F.expr("transform(lat, e -> e.to_v)").alias("tv"),
-        F.expr(
-            "transform(lat, e -> CASE WHEN e.edge_order < size(l_arr)"
-            " THEN l_arr[e.edge_order] END)"
-        ).alias("ml"),
-    )
-
-    # 5-7: DFS prune + ordered '^'-merge + multi->single validation (P10)
-    # in one token-grain Arrow kernel — the only Python in the plan
-    return lattice.prune_merge_validate(token_rows)
+    # 1: token BIOSE labels, one row per document (array-side codegen,
+    # zero shuffle)
+    # 2-7: per distinct (token, label) of each Arrow batch: morph
+    # refinement (= the '^'-merge evidence and the splitting count),
+    # ambiguous lattice, DFS prune, ordered '^'-merge and multi->single
+    # validation (P10) — in one doc-grain Arrow kernel, the only Python
+    # in the plan
+    return lattice.prune_merge_validate(kg.doc_label_arrays(docs))
 
 
 @query("hybrid_pipeline_staged", oracle=_ORACLE)
@@ -136,8 +118,7 @@ def hybrid_pipeline_staged(spark, sf_dir):
         md_labelled.groupBy("doc_id", "word_index")
         .agg(
             F.expr(
-                "concat_ws('^', transform(array_sort(collect_list(struct(morph_index, mlabel))),"
-                " x -> x.mlabel))"
+                "concat_ws('^', array_sort(collect_list(struct(morph_index, mlabel))).mlabel)"
             ).alias("multi_label")
         )
     )

@@ -41,7 +41,7 @@ import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from bench import force
 from hebrew_ner_spark.queries import QUERIES
-from hebrew_ner_spark.session import get_spark
+from hebrew_ner_spark.session import driver_memory, get_spark, host_memory_mb
 
 cores = int(sys.argv[1]); sf = sys.argv[2]; work = sys.argv[3]; rep = int(sys.argv[4])
 spark = get_spark("scale-%d" % cores, master="local[%d]" % cores,
@@ -52,7 +52,8 @@ spark = get_spark("scale-%d" % cores, master="local[%d]" % cores,
                   # partitions whose hash aggregates intermittently
                   # spilled (measured 77s vs 192s on identical input).
                   shuffle_partitions=64,
-                  extra_conf={{"spark.driver.memory": "48g",
+                  # the heap follows this level's slots, capped by the host
+                  extra_conf={{"spark.driver.memory": driver_memory(cores, host_memory_mb()),
                               # the replicated corpus is ~300 MB: the 128 MB
                               # default folds it into ~5 input splits, which
                               # starves the 16-core level on every narrow

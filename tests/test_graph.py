@@ -4,6 +4,7 @@ from pyspark.sql import Row
 
 from hebrew_ner_spark.operators import canonicalize, linking
 from hebrew_ner_spark.plans import rounds
+from hebrew_ner_spark.resources import ENTITY_TERMS
 
 
 def test_tiered_linking_precedence(spark):
@@ -413,3 +414,15 @@ def test_pagerank_warm_delta_advantage(spark):
     err_warm = sum(abs(w1[v] - ref[v]) for v in ref)
     err_cold = sum(abs(c1[v] - ref[v]) for v in ref)
     assert err_warm < err_cold
+
+
+def test_entity_dim_is_built_jvm_side(spark):
+    # a createDataFrame table scans a Python RDD on every evaluation
+    dim = linking.entity_dim(spark)
+    assert dim.dtypes == [("entity_id", "bigint"), ("canonical_name", "string")]
+    plan = dim._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    rows = sorted(tuple(r) for r in dim.collect())
+    terms = sorted(ENTITY_TERMS)
+    half = len(terms) // 2
+    assert rows == [(i + 1, t if i < half else t.capitalize()) for i, t in enumerate(terms)]
